@@ -14,8 +14,8 @@ sandbox, so the "browser" is a deterministic scripted renderer: given a
 (result anchors + a next-page link) as a pure function of (keyword, page) —
 the same scalar runs in the golden simulator, so routing, extraction,
 pagination, and frontier feedback of the emulator path are all pinned by the
-fetch-order/URL-seen invariants.  Routing is URL-based (path prefix
-``/search``) instead of template-based (the reference routes on the task's
+fetch-order/URL-seen invariants.  Routing is URL-based (the path
+``/search`` or below it) instead of template-based (the reference routes on the task's
 ``emulator`` map) — documented deviation; observable dataflow matches.
 """
 
@@ -48,7 +48,8 @@ TASK_MAX_RETRY = 3  # fetcher.emulator.taskmaxretrycount=3 (application.properti
 
 def emulator_script(url: str):
     """Script-registry dispatch: ``(extractor_name, render_fn)`` for the
-    first registered path prefix matching the URL, else None.
+    registered script path the URL's path equals or lies under (a ``/``
+    boundary: ``/feed/x`` routes, ``/feedback`` does not), else None.
 
     The reference's emulator is an extensible registry — ``Task.emulator``
     maps script names to WebDriver scripts and ``SearchScript`` is just one
@@ -62,7 +63,7 @@ def emulator_script(url: str):
     if p is None:
         return None
     for prefix, entry in EMULATOR_SCRIPTS.items():
-        if p.startswith(prefix):
+        if p == prefix or p.startswith(prefix + "/"):
             return entry
     return None
 

@@ -49,7 +49,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from crawler_spark.operators.dedup import admit_new_exact, with_bucket
+from crawler_spark.operators.dedup import Admission, admit_new_exact, counted, with_bucket
 
 __all__ = [
     "CUCKOO_SCHEMA",
@@ -348,11 +348,20 @@ def expire_for_recrawl(
     return seen_next, filter_next
 
 
+def _admit_then_update(
+    candidates: DataFrame, url_seen: DataFrame, filter_df: DataFrame, n_buckets: int,
+    fpp: float = 0.01,
+) -> Admission:
+    """The engine's admit op (see dedup.BLOOM_OPS): admit, then insert the
+    admitted hashes."""
+    admitted = admit_new_cuckoo(candidates, url_seen, filter_df, n_buckets)
+    return counted(admitted, cuckoo_update(filter_df, admitted, n_buckets, fpp))
+
+
 # engine-facing namespace: interchangeable with dedup.BLOOM_OPS
 CUCKOO_OPS = SimpleNamespace(
     name="cuckoo",
     format_id=3,
     build=cuckoo_build,
-    update=cuckoo_update,
-    admit=admit_new_cuckoo,
+    admit=_admit_then_update,
 )

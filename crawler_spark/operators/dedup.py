@@ -14,21 +14,34 @@ Bloom/cuckoo URL-seen set with canonicalized hashing.  Design:
 
 The filter state is a DATAFRAME — one row per hash bucket, bits sized from
 that bucket's OBSERVED count (not a global constant) — persisted beside the
-checkpoint as a parquet table and updated/probed entirely executor-side:
+checkpoint as a parquet table and updated/probed entirely executor-side.
+Every pass is an ``applyInPandas`` grouped by SHARD, ``pmod(bucket, P)``
+with P = min(n_buckets, shuffle partitions): one Python call per shard
+loops over its buckets with numpy slices (a per-bucket grouping paid one
+pandas round-trip per bucket — 256 per pass for a few hundred hashes).  At
+cluster scale P >= n_buckets, so a shard is one bucket.
 
-* build  — ``applyInPandas`` per bucket: numpy bitset, double hashing;
-  capacity = headroom × observed items (min floor), fpp-targeted sizing.
-* update — cogrouped ``applyInPandas`` of (bloom row, round's admitted
-  hashes): OR the delta's bits into the bucket at its existing geometry;
-  new buckets size themselves from the delta.  O(Δ) work per round.
-* probe  — cogrouped ``applyInPandas`` of (candidates, bloom row): the
-  bits never transit the driver and are never broadcast (round 1 collected
-  the whole filter into a driver dict and re-broadcast it every round —
-  ~12 GB of driver bits at 10¹⁰ URLs, plus a broadcast leak).
+* build  — numpy bitset per bucket, double hashing; capacity = headroom ×
+  observed items (min floor), fpp-targeted sizing.
+* update — cogroup of (bloom rows, delta hashes) per shard: OR each
+  bucket's delta into its bits at its existing geometry; new buckets size
+  themselves from the delta.  O(Δ) work per round.
+* probe  — cogroup of (candidates, bloom rows) per shard: the bits never
+  transit the driver and are never broadcast (round 1 collected the whole
+  filter into a driver dict and re-broadcast it every round — ~12 GB of
+  driver bits at 10¹⁰ URLs, plus a broadcast leak).
+* fused  — what the engine runs each round (``bloom_admit``): ONE cogroup
+  probes the candidates and emits every bucket's next row, ORing in the
+  definitely-new hashes.  A false positive the exact anti-join confirms as
+  new has all k bits set already, so only its bucket's ``n_items`` needs
+  correcting, from the same job that counts the admitted rows.  The pass
+  is persisted until the commit writes the next rows from it.
 * resize — a bucket whose ``n_items`` exceeds ``capacity`` degrades fpp but
   NEVER correctness (the filter only prunes anti-join probes); the engine
   rebuilds saturated buckets from url_seen with grown capacity.
 
+Every pass returns the rows of the per-bucket definition exactly (tested
+in tests/test_dedup.py), so persisted tables keep ``format_id`` 2.
 The Bloom filter only PRUNES probes; admitted membership is identical with
 the fast path on or off (tested in tests/test_dedup.py).
 """
@@ -36,6 +49,7 @@ the fast path on or off (tested in tests/test_dedup.py).
 from __future__ import annotations
 
 import math
+from typing import NamedTuple, Optional
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -49,7 +63,12 @@ __all__ = [
     "bloom_build",
     "bloom_update",
     "bloom_probe",
+    "bloom_probe_update",
     "admit_new_bloom",
+    "Admission",
+    "counted",
+    "bloom_admit",
+    "BLOOM_OPS",
 ]
 
 BLOOM_SCHEMA = "bucket int, bits binary, n_bits long, k int, n_items long, capacity long"
@@ -125,6 +144,79 @@ def _sized_row(bucket: int, hashes: np.ndarray, fpp: float):
 
 
 # ---------------------------------------------------------------------------
+# per-shard kernels (executor-side; one Python call per shard of buckets)
+# ---------------------------------------------------------------------------
+
+BLOOM_COLS = ["bucket", "bits", "n_bits", "k", "n_items", "capacity"]
+
+
+def _n_shards(df: DataFrame, n_buckets: int) -> int:
+    """Groups per Bloom pass: min(n_buckets, shuffle partitions).  A group
+    is a shard of buckets (``pmod(bucket, P)``); at cluster scale P >=
+    n_buckets, so a shard is one bucket and per-group memory is unchanged."""
+    parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return max(1, min(n_buckets, parts))
+
+
+def _with_shard(df: DataFrame, n_shards: int) -> DataFrame:
+    return df.withColumn("shard", F.pmod(F.col("bucket"), F.lit(n_shards)))
+
+
+def _by_bucket(buckets: np.ndarray):
+    """(bucket, row positions) for each distinct bucket of a shard."""
+    order = np.argsort(buckets, kind="stable")
+    uniq, starts = np.unique(buckets[order], return_index=True)
+    return zip(uniq.tolist(), np.split(order, starts[1:]))
+
+
+def _probe_shard(cand, bl) -> np.ndarray:
+    """probably_seen for each candidate row of a shard (aligned with cand).
+    A bucket with no Bloom row probes definite-new."""
+    seen = np.zeros(len(cand), dtype=bool)
+    if len(cand) == 0 or len(bl) == 0:
+        return seen
+    row_of = {int(b): i for i, b in enumerate(bl["bucket"])}
+    hashes = cand["url_hash"].to_numpy(dtype=np.int64)
+    for b, pos in _by_bucket(cand["bucket"].to_numpy()):
+        i = row_of.get(b)
+        if i is not None:
+            seen[pos] = _probe_bits(
+                hashes[pos], bytes(bl["bits"].iat[i]), int(bl["n_bits"].iat[i]),
+                int(bl["k"].iat[i]),
+            )
+    return seen
+
+
+def _update_shard(bl, buckets: np.ndarray, hashes: np.ndarray, fpp: float) -> list[dict]:
+    """Next rows of a shard: existing buckets OR the delta in at their own
+    geometry, fresh buckets size themselves from the delta."""
+    delta = {b: hashes[pos] for b, pos in _by_bucket(buckets)}
+    rows = []
+    for r in bl.itertuples(index=False):
+        h = delta.pop(int(r.bucket), None)
+        n_bits, k = int(r.n_bits), int(r.k)
+        if h is None:
+            bits = bytes(r.bits)
+        else:
+            arr = np.frombuffer(bytes(r.bits), dtype=np.uint8).copy()
+            _or_into(arr, h, n_bits, k)
+            bits = arr.tobytes()
+        rows.append({
+            "bucket": int(r.bucket), "bits": bits, "n_bits": n_bits, "k": k,
+            "n_items": int(r.n_items) + (0 if h is None else len(h)),
+            "capacity": int(r.capacity),
+        })
+    rows.extend(_sized_row(b, h, fpp) for b, h in delta.items())
+    return rows
+
+
+def _rows_frame(rows: list[dict]):
+    import pandas as pd
+
+    return pd.DataFrame(rows, columns=BLOOM_COLS)
+
+
+# ---------------------------------------------------------------------------
 # DataFrame-level state lifecycle
 # ---------------------------------------------------------------------------
 
@@ -136,14 +228,14 @@ def bloom_build(url_seen: DataFrame, n_buckets: int = 256, fpp: float = DEFAULT_
     and sized from that bucket's observed count — no driver collect, no
     global size constant (round 1 hardcoded 100k/bucket: beyond ~10⁷ URLs
     fpp→1 while still paying the probe pass)."""
-    import pandas as pd
+    empty = _rows_frame([])
 
     def _build(pdf):
-        hashes = pdf["url_hash"].to_numpy(dtype=np.int64)
-        return pd.DataFrame([_sized_row(int(pdf["bucket"].iloc[0]), hashes, fpp)])
+        return _rows_frame(_update_shard(
+            empty, pdf["bucket"].to_numpy(), pdf["url_hash"].to_numpy(dtype=np.int64), fpp))
 
-    hashed = with_bucket(url_seen, n_buckets)
-    return hashed.select("bucket", "url_hash").groupBy("bucket").applyInPandas(
+    hashed = with_bucket(url_seen, n_buckets).select("bucket", "url_hash")
+    return _with_shard(hashed, _n_shards(hashed, n_buckets)).groupBy("shard").applyInPandas(
         _build, BLOOM_SCHEMA
     )
 
@@ -153,90 +245,93 @@ def bloom_update(
 ) -> DataFrame:
     """OR the round's admitted url_hash delta into the filter — executor-side.
 
-    Cogroup (bloom row, delta hashes) per bucket: existing buckets keep
+    Cogroup (bloom rows, delta hashes) per shard: existing buckets keep
     their geometry (bits OR delta), fresh buckets size from the delta.
     A bucket past capacity keeps absorbing (fpp degrades, correctness does
     not); the engine rebuilds it from url_seen when it notices
     ``n_items > capacity`` (the bloom table is n_buckets rows — checking is
     a trivial job)."""
-    import pandas as pd
-
     delta = with_bucket(admitted.select("url_hash"), n_buckets).select("bucket", "url_hash")
+    n_shards = _n_shards(delta, n_buckets)
 
     def _merge(key, old, new):
-        bucket = int(key[0])
-        hashes = new["url_hash"].to_numpy(dtype=np.int64) if len(new) else np.empty(0, np.int64)
-        if len(old) == 0:
-            if len(hashes) == 0:  # unreachable (cogroup keys exist on a side)
-                return pd.DataFrame(
-                    {
-                        "bucket": pd.Series(dtype="int32"),
-                        "bits": pd.Series(dtype=object),
-                        "n_bits": pd.Series(dtype="int64"),
-                        "k": pd.Series(dtype="int32"),
-                        "n_items": pd.Series(dtype="int64"),
-                        "capacity": pd.Series(dtype="int64"),
-                    }
-                )
-            return pd.DataFrame([_sized_row(bucket, hashes, fpp)])
-        row = old.iloc[0]
-        bits = np.frombuffer(bytes(row["bits"]), dtype=np.uint8).copy()
-        n_bits, k = int(row["n_bits"]), int(row["k"])
-        if len(hashes):
-            _or_into(bits, hashes, n_bits, k)
-        return pd.DataFrame(
-            [
-                {
-                    "bucket": bucket,
-                    "bits": bits.tobytes(),
-                    "n_bits": n_bits,
-                    "k": k,
-                    "n_items": int(row["n_items"]) + len(hashes),
-                    "capacity": int(row["capacity"]),
-                }
-            ]
-        )
+        return _rows_frame(_update_shard(
+            old, new["bucket"].to_numpy(), new["url_hash"].to_numpy(dtype=np.int64), fpp))
 
     return (
-        bloom.groupBy("bucket")
-        .cogroup(delta.groupBy("bucket"))
+        _with_shard(bloom, n_shards).groupBy("shard")
+        .cogroup(_with_shard(delta, n_shards).groupBy("shard"))
         .applyInPandas(_merge, BLOOM_SCHEMA)
     )
+
+
+def _ddl(df: DataFrame) -> list[str]:
+    return [f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields]
 
 
 def bloom_probe(candidates: DataFrame, bloom: DataFrame, n_buckets: int) -> DataFrame:
     """Add ``probably_seen`` to candidates (must carry url_hash).
 
-    Cogrouped probe: each bucket's candidates meet that bucket's bits on the
+    Cogrouped probe: each shard's candidates meet that shard's bits on the
     executors — the filter is never collected or broadcast.  A bucket with
     no bloom row (nothing seen there yet) probes definite-new.
     """
     cols = [f.name for f in candidates.schema.fields]
-    out_schema = ", ".join(
-        [f"{f.name} {f.dataType.simpleString()}" for f in candidates.schema.fields]
-        + ["probably_seen boolean"]
-    )
+    out_schema = ", ".join(_ddl(candidates) + ["probably_seen boolean"])
+    bucketed = with_bucket(candidates, n_buckets)
+    n_shards = _n_shards(bucketed, n_buckets)
 
     def _probe(key, cand, bl):
-        if len(cand) == 0:
-            return cand.assign(probably_seen=np.empty(0, dtype=bool))[cols + ["probably_seen"]]
-        if len(bl) == 0:
-            cand = cand.assign(probably_seen=False)
-        else:
-            row = bl.iloc[0]
-            hashes = cand["url_hash"].to_numpy(dtype=np.int64)
-            cand = cand.assign(
-                probably_seen=_probe_bits(
-                    hashes, bytes(row["bits"]), int(row["n_bits"]), int(row["k"])
-                )
-            )
-        return cand[cols + ["probably_seen"]]
+        return cand[cols].assign(probably_seen=_probe_shard(cand, bl))
 
-    bucketed = with_bucket(candidates, n_buckets)
     return (
-        bucketed.groupBy("bucket")
-        .cogroup(bloom.groupBy("bucket"))
+        _with_shard(bucketed, n_shards).groupBy("shard")
+        .cogroup(_with_shard(bloom, n_shards).groupBy("shard"))
         .applyInPandas(_probe, out_schema)
+    )
+
+
+def bloom_probe_update(
+    candidates: DataFrame, bloom: DataFrame, n_buckets: int, fpp: float = DEFAULT_FPP
+) -> DataFrame:
+    """The fused pass: one cogroup that probes the candidates AND emits every
+    bucket's next row (bits ORed with the definitely-new candidates' hashes,
+    ``n_items`` grown by their count).
+
+    Two kinds of output row: a probed candidate (its columns, ``bucket``,
+    ``probably_seen``; Bloom columns null) or a bucket's next row (Bloom
+    columns; candidate columns null).  Probable hits are left out of the
+    next rows: a hit has all k bits set already, and the caller adds the
+    ones the exact anti-join confirms as new to ``n_items``."""
+    import pandas as pd
+
+    cols = [f.name for f in candidates.schema.fields]
+    bucketed = with_bucket(candidates, n_buckets)
+    out_schema = ", ".join(
+        _ddl(bucketed) + ["probably_seen boolean", BLOOM_SCHEMA.removeprefix("bucket int, ")]
+    )
+    n_shards = _n_shards(bucketed, n_buckets)
+
+    def _nullable(pdf):
+        # each row kind nulls the other's columns; numpy ints would fall
+        # back to float and round 64-bit hashes
+        return pdf.convert_dtypes(
+            infer_objects=False, convert_string=False, convert_floating=False)
+
+    def _fused(key, cand, bl):
+        seen = _probe_shard(cand, bl)
+        new = ~seen
+        nxt = _update_shard(
+            bl, cand["bucket"].to_numpy()[new],
+            cand["url_hash"].to_numpy(dtype=np.int64)[new], fpp,
+        )
+        probed = cand[cols + ["bucket"]].assign(probably_seen=seen)
+        return pd.concat([_nullable(probed), _nullable(_rows_frame(nxt))], ignore_index=True)
+
+    return (
+        _with_shard(bucketed, n_shards).groupBy("shard")
+        .cogroup(_with_shard(bloom, n_shards).groupBy("shard"))
+        .applyInPandas(_fused, out_schema)
     )
 
 
@@ -255,8 +350,64 @@ def admit_new_bloom(
     return definite_new.unionByName(confirmed_new)
 
 
+class Admission(NamedTuple):
+    """One round's URL-seen admission, materialized: ``admitted`` is
+    persisted and counted; ``state_next`` is the next filter state (lazy,
+    reading only persisted rows) or None; ``cached`` lists the frames to
+    unpersist once ``state_next`` is written."""
+
+    admitted: DataFrame
+    state_next: Optional[DataFrame]
+    n_admitted: int
+    cached: tuple
+
+
+def counted(admitted: DataFrame, state_next: Optional[DataFrame] = None) -> Admission:
+    """Persist and count ``admitted`` (one job) — the Admission of a filter
+    whose next state needs nothing but the persisted rows."""
+    admitted = admitted.persist()
+    return Admission(admitted, state_next, admitted.count(), (admitted,))
+
+
+def bloom_admit(
+    candidates: DataFrame, url_seen: DataFrame, bloom: DataFrame, n_buckets: int,
+    fpp: float = DEFAULT_FPP,
+) -> Admission:
+    """Admission and the next filter from ONE Python pass (bloom_probe_update).
+
+    ``admitted`` holds admit_new_bloom's rows plus ``bucket`` and
+    ``probably_seen`` (true for a Bloom false positive the anti-join
+    confirmed as new).  ``state_next`` holds bloom_update(bloom, admitted)'s
+    rows: the bits are exact because a probable hit has all k bits set
+    already, and ``n_items`` adds each bucket's confirmed false positives,
+    counted by the same job that counts the admitted rows.  The fused pass
+    stays persisted until ``state_next`` is written, so that write reads
+    persisted rows only."""
+    fused = bloom_probe_update(candidates, bloom, n_buckets, fpp).persist()
+    cols = [f.name for f in candidates.schema.fields] + ["bucket", "probably_seen"]
+    probed = fused.filter(F.col("bits").isNull()).select(*cols)
+    confirmed_new = probed.filter(F.col("probably_seen")).join(
+        url_seen.select("url"), "url", "left_anti")
+    admitted = probed.filter(~F.col("probably_seen")).unionByName(confirmed_new).persist()
+    tally = (
+        admitted.groupBy(F.when(F.col("probably_seen"), F.col("bucket")).alias("fp_bucket"))
+        .count()
+        .collect()
+    )
+    false_pos = {r["fp_bucket"]: r["count"] for r in tally if r["fp_bucket"] is not None}
+    n_items = F.col("n_items")
+    if false_pos:
+        per_bucket = F.create_map(*[F.lit(v) for kv in false_pos.items() for v in kv])
+        n_items = n_items + F.coalesce(F.try_element_at(per_bucket, F.col("bucket")), F.lit(0))
+    state_next = fused.filter(F.col("bits").isNotNull()).select(
+        *[n_items.alias(c) if c == "n_items" else c for c in BLOOM_COLS]
+    )
+    return Admission(admitted, state_next, sum(r["count"] for r in tally), (admitted, fused))
+
+
 # engine-facing namespace: the fast-path filter is pluggable (north rule says
 # "Bloom/cuckoo"); operators/cuckoo.py exposes the interchangeable CUCKOO_OPS.
+# ``admit(candidates, url_seen, state, n_buckets, fpp)`` returns an Admission.
 # format_id versions the persisted state in the round manifest — a resume
 # under a different filter kind (or bucketing) rebuilds instead of
 # misreading foreign bytes.
@@ -266,6 +417,5 @@ BLOOM_OPS = SimpleNamespace(
     name="bloom",
     format_id=2,
     build=bloom_build,
-    update=bloom_update,
-    admit=admit_new_bloom,
+    admit=bloom_admit,
 )

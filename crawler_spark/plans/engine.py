@@ -71,6 +71,21 @@ SAT_CHECK_EVERY = 8  # rounds between bloom saturation sweeps (cheap, periodic)
 _RETRIABLE = ("fetch_retries_exhausted", "anti_retries_exhausted", "timeout")
 
 
+def rows_digest(df: DataFrame, cols: list[str]) -> int:
+    """Order-independent digest of the multiset of ``df``'s rows over
+    ``cols``: the row count and the sum of the rows' 64-bit hashes modulo
+    2^64, packed as ``count << 64 | sum``.  A duplicated row changes it (an
+    xor of hashes cancels pairs), and a null field hashes as a sentinel (so
+    rows that differ only in which field is null stay distinct)."""
+    key = F.concat_ws(
+        "|", *[F.coalesce(F.col(c).cast("string"), F.lit("\u2205")) for c in cols]
+    )
+    n, total = df.agg(
+        F.count("*"), F.sum(F.xxhash64(key).cast("decimal(38,0)"))
+    ).first()
+    return n << 64 | int(total or 0) % (1 << 64)
+
+
 class CrawlEngine:
     def __init__(
         self,
@@ -408,11 +423,15 @@ class CrawlEngine:
         )
         return self._robots_allow(cands).select(*FRONTIER_COLS)
 
-    def _admit(self, candidates: DataFrame, url_seen: DataFrame) -> DataFrame:
+    def _admit(self, candidates: DataFrame, url_seen: DataFrame) -> dd.Admission:
+        """Admitted candidates, persisted and counted, plus the next URL-seen
+        filter (lazy: the commit write is its single materialization)."""
         cands = dd.with_url_hash(candidates)
         if self.use_bloom and self._bloom is not None:
-            return self._seen_ops.admit(cands, url_seen, self._bloom, self.bloom_buckets)
-        return dd.admit_new_exact(cands, url_seen)
+            return self._seen_ops.admit(
+                cands, url_seen, self._bloom, self.bloom_buckets, self.bloom_fpp
+            )
+        return dd.counted(dd.admit_new_exact(cands, url_seen))
 
     def _bloom_init(self, url_seen: DataFrame, resume_round: Optional[int]) -> None:
         """Load the persisted Bloom table (resume) or build it from url_seen.
@@ -424,8 +443,9 @@ class CrawlEngine:
         rebuild from url_seen.  (Round 1 pickled a driver-side dict with no
         check; state is now a plain parquet table, no pickle surface.)
 
-        After init the filter is INCREMENTAL: each round cogroups only the
-        admitted delta's hashes into the bucket bits (O(Δ), executor-side).
+        After init the filter is INCREMENTAL: each round's admission pass
+        ORs only the admitted delta's hashes into the bucket bits (O(Δ),
+        executor-side).
         """
         if not self.use_bloom:
             return
@@ -448,16 +468,6 @@ class CrawlEngine:
                 except Exception:
                     pass  # missing/torn table → rebuild below
         self._bloom = self._seen_ops.build(url_seen, self.bloom_buckets, self.bloom_fpp)
-
-    def _bloom_next(self, admitted: DataFrame) -> Optional[DataFrame]:
-        """The next round's filter: fold in the admitted delta (lazy — the
-        commit write is the single materialization; no extra per-round job,
-        the fetch loop is latency-critical)."""
-        if not (self.use_bloom and self._bloom is not None):
-            return None
-        return self._seen_ops.update(
-            self._bloom, admitted.select("url_hash"), self.bloom_buckets, self.bloom_fpp
-        )
 
     def _bloom_maybe_rebuild(self, url_seen: DataFrame, rnd: int) -> None:
         """Periodic saturation sweep over the COMMITTED bloom table (tiny —
@@ -777,9 +787,10 @@ class CrawlEngine:
             if timed_out is not None:
                 kept = kept.join(timed_out.select("url"), "url", "left_anti")
             candidates = self._expand(fetched, rnd)
-            admitted = self._admit(candidates, url_seen).persist()
-            n_admitted = admitted.count()  # materialize before the concurrent commit writes
-            bloom_next = self._bloom_next(admitted)
+            # materialized here, before the concurrent commit writes
+            admission = self._admit(candidates, url_seen)
+            admitted, n_admitted = admission.admitted, admission.n_admitted
+            bloom_next = admission.state_next
             seen_delta = admitted.select("url", "url_hash", F.lit(rnd + 1).alias("round"))
             folded_seeds = seed_seen is not None
             if folded_seeds:  # first commit carries the seed membership
@@ -907,20 +918,12 @@ class CrawlEngine:
                     meta["bloom_round"] = rnd
                 else:
                     meta["bloom_round"] = self._bloom_round
-            t_commit = time.time()
             rc.commit(meta=meta, compacted=("url_seen",) if compact_seen else ())
-            if os.environ.get("SPARK_GRAFT_DEBUG_TIMING"):
-                print(
-                    f"TIMING round={rnd} submitted_by={t_commit - t0:.1f}s "
-                    f"drain={time.time() - t_commit:.1f}s "
-                    f"wall={time.time() - t0:.1f}s selected={n_selected}",
-                    flush=True,
-                )
             summary["rounds_detail"].append(
                 {"round": rnd, "selected": n_selected, "wall_s": round(time.time() - t0, 3)}
             )
-            classified.unpersist()
-            admitted.unpersist()
+            for df in (classified, *admission.cached):
+                df.unpersist()
             if stale is not None:
                 stale.unpersist()
             if timed_out is not None:
@@ -949,21 +952,11 @@ class CrawlEngine:
             summary["dead"] = dead_all.count() if dead_all is not None else 0
             seen = snap.read_deltas(spark, self.ckpt_dir, "url_seen", last)
             summary["url_seen"] = seen.count()
-            # order-independent SET digests (xor of 64-bit hashes): two runs
-            # with equal counts but different members get different digests,
-            # so backend-equivalence checks (scripts/ab_backend_bench.py)
-            # compare actual membership, not just cardinality
-            summary["url_seen_digest"] = (
-                seen.agg(F.expr("bit_xor(xxhash64(url))")).first()[0] or 0
-            )
-            summary["fetch_log_digest"] = (
-                log.agg(
-                    F.expr(
-                        "bit_xor(xxhash64(concat_ws('|', cast(round as string),"
-                        " url, status, cast(attempt as string))))"
-                    )
-                ).first()[0]
-                or 0
+            # order-independent row digests: backend-equivalence checks
+            # (scripts/ab_backend_bench.py) compare actual rows, not counts
+            summary["url_seen_digest"] = rows_digest(seen, ["url"])
+            summary["fetch_log_digest"] = rows_digest(
+                log, ["round", "url", "status", "attempt"]
             )
             if self.ingest_payloads:
                 plog = snap.read_deltas(spark, self.ckpt_dir, "payload_log", last)

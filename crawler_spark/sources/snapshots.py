@@ -25,8 +25,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import time as _time
-from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -79,10 +78,7 @@ class RoundCommit:
         path = os.path.join(self.rdir, name)
 
         def _write():
-            t0 = _time.time()
             df.write.mode("overwrite").parquet(path)
-            if os.environ.get("SPARK_GRAFT_DEBUG_TIMING"):
-                print(f"TIMING   write {name}: {_time.time() - t0:.1f}s", flush=True)
             return path
 
         self._futs[name] = self._ex.submit(_write)
@@ -93,16 +89,22 @@ class RoundCommit:
         blobs: Optional[dict[str, bytes]] = None,
         compacted: tuple[str, ...] = (),
     ) -> dict:
-        """Wait for every submitted write, then seal the manifest."""
+        """Wait for every submitted write, then seal the manifest.
+
+        If a write fails, the writes not yet started are cancelled and the
+        running ones finish before the error propagates: no commit thread
+        outlives a failed commit, so the torn round directory that resume
+        removes has no writer left."""
         manifest: dict = {"round": self.rnd, "tables": {}, "blobs": [], "meta": meta or {}}
         try:
+            wait(self._futs.values(), return_when=FIRST_EXCEPTION)
             for name, fut in self._futs.items():
                 manifest["tables"][name] = {
                     "path": fut.result(),
                     "compacted": name in compacted,
                 }
         finally:
-            self._ex.shutdown(wait=False)
+            self._ex.shutdown(wait=True, cancel_futures=True)
         for fname, data in (blobs or {}).items():
             with open(os.path.join(self.rdir, fname), "wb") as f:
                 f.write(data)

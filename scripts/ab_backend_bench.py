@@ -90,10 +90,10 @@ def main() -> None:
                     "steady_metric": "steady" if steady is not None else "all_in",
                     "all_in": res["value"],
                     "selected": res["selected"], "url_seen": res["url_seen"],
-                    # order-independent set digests (crawl_job summary): equal
-                    # digests prove equal MEMBERSHIP of the url_seen set and
-                    # the (round, url, status, attempt) fetch log, not just
-                    # equal cardinality
+                    # order-independent row digests (crawl_job summary): equal
+                    # digests prove equal url_seen rows and equal
+                    # (round, url, status, attempt) fetch-log rows, counts
+                    # and duplicates included
                     "url_seen_digest": res.get("url_seen_digest"),
                     "fetch_log_digest": res.get("fetch_log_digest"),
                     "payload_ok": bool(res["payload_ok"]),
@@ -131,7 +131,7 @@ def main() -> None:
             "ratio_min": round(min(ratios), 4),
             "ratio_max": round(max(ratios), 4),
             "identical_results": same,
-            "identity_check": "counts + payload + url_seen/fetch_log set digests",
+            "identity_check": "counts + payload + url_seen/fetch_log row digests",
         }
         print(f"local[{cpus}]: cuckoo/bloom ratios {ratios} "
               f"(median {levels[str(cpus)]['median_ratio']}), "

@@ -57,6 +57,97 @@ def test_bloom_no_false_negatives(seen_and_cands):
     ))
 
 
+# --- shard-grouped kernels vs a per-bucket reference -----------------------
+
+
+def _ref_rows(hashes, n_buckets, fpp, rows=None):
+    """Per-bucket reference: build (rows=None) or update existing rows with
+    ``hashes``, bucket by bucket, from the numpy primitives."""
+    import numpy as np
+
+    rows = {r["bucket"]: dict(r) for r in (rows or {}).values()}
+    by_bucket = {}
+    for h in hashes:
+        by_bucket.setdefault(h % n_buckets, []).append(h)
+    for b, hs in by_bucket.items():
+        hs = np.array(hs, dtype=np.int64)
+        if b not in rows:
+            rows[b] = dd._sized_row(b, hs, fpp)
+            continue
+        r = rows[b]
+        bits = np.frombuffer(r["bits"], dtype=np.uint8).copy()
+        dd._or_into(bits, hs, r["n_bits"], r["k"])
+        rows[b] = {**r, "bits": bits.tobytes(), "n_items": r["n_items"] + len(hs)}
+    return rows
+
+
+def _ref_probe(rows, h, n_buckets):
+    import numpy as np
+
+    r = rows.get(h % n_buckets)
+    if r is None:
+        return False
+    return bool(dd._probe_bits(np.array([h], dtype=np.int64), r["bits"], r["n_bits"], r["k"])[0])
+
+
+def _as_rows(df):
+    return {
+        r["bucket"]: {**r.asDict(), "bits": bytes(r["bits"])}
+        for r in df.select(*dd.BLOOM_COLS).collect()
+    }
+
+
+@pytest.mark.parametrize(
+    "n_buckets,fpp,n_cands",
+    [(16, 0.01, 300), (4, 0.01, 300), (32, 0.5, 300), (16, 0.01, 0)],
+    ids=["buckets>partitions", "buckets<partitions", "forced-fp", "no-candidates"],
+)
+def test_shard_kernels_match_per_bucket_reference(spark, n_buckets, fpp, n_cands):
+    """Build, update, probe and the fused pass return exactly the rows of a
+    per-bucket reference.  Seen URLs avoid the last two buckets: one gets
+    candidates (a fresh bucket, no Bloom row), one stays empty; buckets
+    above ``n_buckets // 2`` get no candidates (a row, but nothing to
+    probe).  The test session runs 8 shuffle partitions."""
+    mk = lambda urls: dd.with_url_hash(spark.createDataFrame([(u,) for u in urls], "url string"))
+    pool = [f"http://h{i % 5}.example.com/p/{i}" for i in range(4000)]
+    hashes = dict(mk(pool).select("url", "url_hash").collect())
+    bucket = {u: h % n_buckets for u, h in hashes.items()}
+    seen_urls = [u for u in pool[:1500] if bucket[u] < n_buckets - 2]
+    fresh = n_buckets - 2
+    cand_urls = [
+        u for u in pool[1000:] if bucket[u] <= n_buckets // 2 or bucket[u] == fresh
+    ][:n_cands]
+    assert any(bucket[u] == fresh for u in cand_urls) or not n_cands
+    seen, cands = mk(seen_urls), mk(cand_urls)
+
+    ref = _ref_rows([hashes[u] for u in seen_urls], n_buckets, fpp)
+    bloom = dd.bloom_build(seen, n_buckets, fpp).persist()
+    assert _as_rows(bloom) == ref
+
+    probed = {r.url: r.probably_seen for r in dd.bloom_probe(cands, bloom, n_buckets).collect()}
+    ref_probed = {u: _ref_probe(ref, hashes[u], n_buckets) for u in cand_urls}
+    assert probed == ref_probed
+
+    upd = dd.bloom_update(bloom, cands.select("url_hash"), n_buckets, fpp)
+    assert _as_rows(upd) == _ref_rows([hashes[u] for u in cand_urls], n_buckets, fpp, ref)
+
+    seen_set = set(seen_urls)
+    exact = {u for u in cand_urls if u not in seen_set}
+    false_pos = {u for u in exact if ref_probed[u]}
+    if fpp == 0.5:
+        assert false_pos  # the n_items correction runs
+    adm = dd.bloom_admit(cands, seen, bloom, n_buckets, fpp)
+    rows = adm.admitted.collect()
+    assert {r.url for r in rows} == exact == {
+        r.url for r in dd.admit_new_bloom(cands, seen, bloom, n_buckets).collect()}
+    assert adm.n_admitted == len(rows) == len(exact)
+    assert {r.url for r in rows if r.probably_seen} == false_pos
+    assert _as_rows(adm.state_next) == _ref_rows(
+        [hashes[u] for u in exact], n_buckets, fpp, ref)
+    for df in (bloom, *adm.cached):
+        df.unpersist()
+
+
 def test_bloom_sized_from_observed_counts_fpp_bounded(spark):
     """Scale path: 10⁷ seen hashes, bits sized per-bucket from observed
     counts — false-positive rate on fresh keys stays ≤ 2× nominal, and the
@@ -119,6 +210,57 @@ def test_round_commit_streaming_and_torn_write(spark, tmpdir_path):
     retry.write("early", spark.range(3).withColumnRenamed("id", "a"))
     retry.commit()
     assert snap.committed_rounds(tmpdir_path) == [0, 1]
+
+
+class _Table:
+    """The slice of DataFrame RoundCommit.write uses (``df.write.mode(m)
+    .parquet(path)``), logging when each write starts and ends."""
+
+    def __init__(self, log, seconds=0.0, error=None):
+        self.log, self.seconds, self.error = log, seconds, error
+
+    @property
+    def write(self):
+        return self
+
+    def mode(self, _):
+        return self
+
+    def parquet(self, path):
+        import time
+
+        name = os.path.basename(path)
+        self.log.append(("start", name))
+        time.sleep(self.seconds)
+        try:
+            if self.error:
+                raise self.error
+            os.makedirs(path)
+        finally:
+            self.log.append(("end", name))
+
+
+def test_round_commit_failed_write_stops_siblings(tmpdir_path):
+    """A table write that raises fails the commit only after the running
+    writes end and the queued ones are cancelled: no writer outlives the
+    failed commit (resume removes its round directory), and no manifest
+    seals the round."""
+    from crawler_spark.sources import snapshots as snap
+
+    log = []
+    rc = snap.RoundCommit(tmpdir_path, 0, max_workers=2)
+    rc.write("slow", _Table(log, seconds=0.5))
+    rc.write("bad", _Table(log, error=OSError("disk full")))
+    for i in range(4):
+        rc.write(f"queued{i}", _Table(log, seconds=0.3))
+    with pytest.raises(OSError, match="disk full"):
+        rc.commit(meta={"x": 1})
+    started = [n for ev, n in log if ev == "start"]
+    ended = [n for ev, n in log if ev == "end"]
+    assert sorted(started) == sorted(ended)  # nothing still running
+    assert "queued3" not in started  # cancelled before it could start
+    assert snap.committed_rounds(tmpdir_path) == []
+    assert len(snap.clean_uncommitted(tmpdir_path)) == 1
 
 
 def test_engine_ingest_payloads(spark, tmpdir_path):
@@ -274,3 +416,44 @@ def test_engine_soak_many_rounds_resume_clean(spark, tmpdir_path):
     seen = {r.url for r in eng2.url_seen().collect()}
     logged = {r.url for r in eng2.fetch_log().select("url").distinct().collect()}
     assert logged <= seen
+
+
+def test_engine_rounds_leave_no_persisted_frames(spark, tmpdir_path):
+    """Every frame a round persists (classification, admission, the fused
+    Bloom pass) is released by the round's end: after each round the
+    session holds only the engine's own table caches."""
+    import dataclasses
+
+    from crawler_spark.fixtures import generate
+    from crawler_spark.plans.engine import CrawlEngine
+    from crawler_spark.plans.policy import CrawlConfig
+
+    fix = os.path.join(tmpdir_path, "fix")
+    generate(fix, n_pages=96, n_hosts=4, seed=7)
+    eng = CrawlEngine(spark, fix, os.path.join(tmpdir_path, "ck"), CrawlConfig(max_rounds=1))
+    for df in (eng.pages, eng.robots, eng._landing):
+        df.count()
+    def persisted():  # getPersistentRDDs returns a snapshot: call it each time
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    base = persisted()
+    for rounds in (1, 2, 3):
+        eng.cfg = dataclasses.replace(eng.cfg, max_rounds=rounds)
+        assert eng.run(resume=rounds > 1)["rounds"] == 1
+        assert persisted() == base, f"round {rounds - 1} left persisted RDDs"
+
+
+def test_rows_digest_counts_duplicates_and_null_positions(spark):
+    """Two fetch logs that differ only by a duplicated row, or only by which
+    field is null, get different digests; row order does not matter."""
+    from crawler_spark.plans.engine import rows_digest
+
+    schema = "round int, url string, status string, attempt int"
+    cols = ["round", "url", "status", "attempt"]
+    a, b = (0, "http://h/a", "FETCHED", 0), (1, "http://h/b", "FETCHED", 0)
+    digest = lambda rows: rows_digest(spark.createDataFrame(rows, schema), cols)
+    assert digest([a, b]) == digest([b, a])
+    assert digest([a]) != digest([a, b, b])  # an xor cancels the pair
+    assert digest([a, b]) != digest([a, b, b])
+    assert digest([(0, "http://h/a", None, 0)]) != digest([(0, "http://h/a", "0", None)])
+    assert digest([(0, None, "x", 0)]) != digest([(0, "x", None, 0)])

@@ -2,6 +2,8 @@
 (functions.emulator): routing predicate, keyword extraction, deterministic
 search rendering, pagination chaining, and extraction compatibility."""
 
+from pyspark.sql import functions as F
+
 from crawler_spark.fixtures import DEFAULT_RULES
 from crawler_spark.functions.emulator import (
     emulate_search_html,
@@ -15,7 +17,11 @@ RULES = {r["extractor"]: r for r in DEFAULT_RULES}
 
 def test_routing_predicate():
     assert is_emulator_url("http://h0.example.com/search?_kw_=fox&page=0") is True
-    assert is_emulator_url("http://h0.example.com/searchlight") is True  # prefix rule
+    assert is_emulator_url("http://h0.example.com/search/more?_kw_=fox") is True
+    assert is_emulator_url("http://h0.example.com/feed?_kw_=fox&cursor=0") is True
+    # a script path routes only whole: at its end or a "/" boundary
+    for path in ("/searchlight", "/searchable", "/feedback", "/feeds/1"):
+        assert is_emulator_url(f"http://h0.example.com{path}?_kw_=fox") is False
     assert is_emulator_url("http://h0.example.com/p/7") is False
     assert is_emulator_url("not a url") is False
 
@@ -185,3 +191,31 @@ def test_feed_extraction_compatible_with_generic_rule():
     assert links and all(l.startswith("/p/") for l in links)
     assert nxt == "http://h/feed?_kw_=tree&cursor=1" or nxt is None
     assert not anti
+
+
+def test_prefix_lookalike_paths_take_http_path(spark):
+    """/feedback and /searchable are ordinary pages: the fused fetch-parse
+    UDF parses their fetched body with their own extractor instead of
+    rendering an emulator script (which, lacking a usable page, would
+    record a failed fetch)."""
+    from crawler_spark.functions.extract import fetch_parse_udf
+
+    html = '<html><body><ul class="links"><li><a href="/p/1">x</a></li></ul></body></html>'
+    rows = [
+        ("http://h0.example.com/feedback", html),
+        ("http://h0.example.com/searchable", html),
+        ("http://h0.example.com/feed?_kw_=fox&cursor=0", None),
+    ]
+    df = spark.createDataFrame(rows, "url string, content string")
+    out = df.select(
+        "url",
+        fetch_parse_udf(RULES)(
+            "url", F.lit(None).cast("string"), "content", F.lit("paging"), F.lit("")
+        ).alias("r"),
+    ).collect()
+    got = {r.url: (r.r.known, r.r.extractor, list(r.r.links)) for r in out}
+    for path in ("/feedback", "/searchable"):
+        known, extractor, links = got[f"http://h0.example.com{path}"]
+        assert known and extractor == "paging"
+        assert links == ["/p/1"]
+    assert got["http://h0.example.com/feed?_kw_=fox&cursor=0"][1] == "feed"
