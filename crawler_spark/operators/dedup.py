@@ -3,7 +3,7 @@
 The reference bypasses its duplicate filter (reference
 BackLogFetcher.java:115 ``setSkipDuplicateFilter(true)``) and gets
 at-most-once from savepoints; the north rule instead demands a partitioned
-Bloom/cuckoo URL-seen set with canonicalized hashing.  Design:
+URL-seen set with canonicalized hashing, here a Bloom filter.  Design:
 
 * ground truth  — the ``url_seen`` table; admission is an exact LEFT ANTI
   join against it (membership is the checked invariant).
@@ -41,7 +41,7 @@ cluster scale P >= n_buckets, so a shard is one bucket.
   rebuilds saturated buckets from url_seen with grown capacity.
 
 Every pass returns the rows of the per-bucket definition exactly (tested
-in tests/test_dedup.py), so persisted tables keep ``format_id`` 2.
+in tests/test_dedup.py), so persisted tables keep ``BLOOM_FORMAT`` 2.
 The Bloom filter only PRUNES probes; admitted membership is identical with
 the fast path on or off (tested in tests/test_dedup.py).
 """
@@ -68,9 +68,13 @@ __all__ = [
     "Admission",
     "counted",
     "bloom_admit",
-    "BLOOM_OPS",
+    "BLOOM_FORMAT",
 ]
 
+# versions the persisted Bloom table in the round manifest: a resume whose
+# checkpoint carries another format (or bucketing) rebuilds from url_seen
+# instead of misreading foreign bytes
+BLOOM_FORMAT = 2
 BLOOM_SCHEMA = "bucket int, bits binary, n_bits long, k int, n_items long, capacity long"
 DEFAULT_FPP = 0.01
 MIN_CAPACITY = 1024
@@ -362,11 +366,11 @@ class Admission(NamedTuple):
     cached: tuple
 
 
-def counted(admitted: DataFrame, state_next: Optional[DataFrame] = None) -> Admission:
-    """Persist and count ``admitted`` (one job) — the Admission of a filter
-    whose next state needs nothing but the persisted rows."""
+def counted(admitted: DataFrame) -> Admission:
+    """Persist and count ``admitted`` (one job) — the Admission of the exact
+    path, which keeps no filter state."""
     admitted = admitted.persist()
-    return Admission(admitted, state_next, admitted.count(), (admitted,))
+    return Admission(admitted, None, admitted.count(), (admitted,))
 
 
 def bloom_admit(
@@ -404,18 +408,3 @@ def bloom_admit(
     )
     return Admission(admitted, state_next, sum(r["count"] for r in tally), (admitted, fused))
 
-
-# engine-facing namespace: the fast-path filter is pluggable (north rule says
-# "Bloom/cuckoo"); operators/cuckoo.py exposes the interchangeable CUCKOO_OPS.
-# ``admit(candidates, url_seen, state, n_buckets, fpp)`` returns an Admission.
-# format_id versions the persisted state in the round manifest — a resume
-# under a different filter kind (or bucketing) rebuilds instead of
-# misreading foreign bytes.
-from types import SimpleNamespace  # noqa: E402  (kept beside its single use)
-
-BLOOM_OPS = SimpleNamespace(
-    name="bloom",
-    format_id=2,
-    build=bloom_build,
-    admit=bloom_admit,
-)

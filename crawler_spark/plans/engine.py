@@ -96,7 +96,6 @@ class CrawlEngine:
         use_bloom: bool = True,
         bloom_buckets: int = 256,
         bloom_fpp: float = 0.01,
-        seen_filter: str = "bloom",
         ingest_payloads: bool = False,
         compact_every: int = 16,
         proxy_pool: Optional[list] = None,
@@ -126,17 +125,6 @@ class CrawlEngine:
         self.use_bloom = use_bloom
         self.bloom_buckets = bloom_buckets
         self.bloom_fpp = bloom_fpp
-        # pluggable URL-seen fast path (north rule: "Bloom/cuckoo") — both
-        # prune the exact anti-join identically; cuckoo additionally supports
-        # member deletion (recrawl expiry, operators/cuckoo.expire_for_recrawl)
-        if seen_filter == "bloom":
-            self._seen_ops = dd.BLOOM_OPS
-        elif seen_filter == "cuckoo":
-            from crawler_spark.operators.cuckoo import CUCKOO_OPS
-
-            self._seen_ops = CUCKOO_OPS
-        else:
-            raise ValueError(f"seen_filter must be 'bloom' or 'cuckoo', got {seen_filter!r}")
         # fold url_seen's delta history into a full snapshot every K rounds
         # (read_deltas then unions O(K) dirs instead of O(rounds) — the
         # file-listing/plan-width fix for thousand-round crawls); 0 disables
@@ -428,7 +416,7 @@ class CrawlEngine:
         filter (lazy: the commit write is its single materialization)."""
         cands = dd.with_url_hash(candidates)
         if self.use_bloom and self._bloom is not None:
-            return self._seen_ops.admit(
+            return dd.bloom_admit(
                 cands, url_seen, self._bloom, self.bloom_buckets, self.bloom_fpp
             )
         return dd.counted(dd.admit_new_exact(cands, url_seen))
@@ -452,7 +440,7 @@ class CrawlEngine:
         if resume_round is not None:
             meta = (snap.read_manifest(self.ckpt_dir, resume_round) or {}).get("meta", {})
             compatible = (
-                meta.get("bloom_format") == self._seen_ops.format_id
+                meta.get("bloom_format") == dd.BLOOM_FORMAT
                 and meta.get("bloom_buckets") == self.bloom_buckets
             )
             if compatible:
@@ -467,7 +455,7 @@ class CrawlEngine:
                     return
                 except Exception:
                     pass  # missing/torn table → rebuild below
-        self._bloom = self._seen_ops.build(url_seen, self.bloom_buckets, self.bloom_fpp)
+        self._bloom = dd.bloom_build(url_seen, self.bloom_buckets, self.bloom_fpp)
 
     def _bloom_maybe_rebuild(self, url_seen: DataFrame, rnd: int) -> None:
         """Periodic saturation sweep over the COMMITTED bloom table (tiny —
@@ -489,7 +477,7 @@ class CrawlEngine:
         ]
         if not sat:
             return
-        rebuilt = self._seen_ops.build(
+        rebuilt = dd.bloom_build(
             dd.with_bucket(url_seen.select("url_hash"), self.bloom_buckets)
             .filter(F.col("bucket").isin(sat))
             .drop("bucket"),
@@ -617,7 +605,7 @@ class CrawlEngine:
                 # warc.refetch_seeds(cdx_diff(...)) rows): like the TTL
                 # recrawl sweep, stale URLs are resubmitted DIRECTLY at
                 # PRIORITY_RECRAWL — membership stays truthful so the
-                # Bloom/cuckoo fast path needs no surgery; an anti-join
+                # Bloom fast path needs no surgery; an anti-join
                 # against the pending frontier prevents double submission.
                 refetch = (
                     self._seed_frontier()
@@ -693,10 +681,7 @@ class CrawlEngine:
             # dedup) — the payload-verification log is the round's long pole
             # and would otherwise serialize behind jobs it doesn't depend on.
             # The manifest still seals the round atomically at the end.
-            rc = snap.RoundCommit(
-                self.ckpt_dir, rnd,
-                max_workers=int(os.environ.get("SPARK_GRAFT_COMMIT_THREADS", "8")),
-            )
+            rc = snap.RoundCommit(self.ckpt_dir, rnd)
             round_epoch = 1704067200.0 + float(rnd) * cfg.round_seconds
             fetch_log = classified.select(
                 F.lit(rnd).alias("round"), "host", "rank", "url", "status", "attempt",
@@ -811,8 +796,8 @@ class CrawlEngine:
             # re-stamped.  The sweep rides compaction rounds ONLY — the
             # re-stamp rewrites rows, which the append-only delta history
             # can't express, but the compact round's full-fold snapshot can.
-            # Membership never changes, so the Bloom/cuckoo fast path needs
-            # no surgery: its entries stay truthful.
+            # Membership never changes, so the Bloom fast path needs no
+            # surgery: its entries stay truthful.
             stale = None
             n_recrawl = 0
             if (
@@ -907,7 +892,7 @@ class CrawlEngine:
             meta = {"selected": n_selected, "wall_s": time.time() - t0}
             bloom_written = False
             if bloom_next is not None:
-                meta["bloom_format"] = self._seen_ops.format_id
+                meta["bloom_format"] = dd.BLOOM_FORMAT
                 meta["bloom_buckets"] = self.bloom_buckets
                 if n_admitted or self._bloom_dirty or self._bloom_round is None:
                     # content changed (new hashes OR'd in / saturation rebuild)
@@ -952,8 +937,8 @@ class CrawlEngine:
             summary["dead"] = dead_all.count() if dead_all is not None else 0
             seen = snap.read_deltas(spark, self.ckpt_dir, "url_seen", last)
             summary["url_seen"] = seen.count()
-            # order-independent row digests: backend-equivalence checks
-            # (scripts/ab_backend_bench.py) compare actual rows, not counts
+            # order-independent row digests: equivalence checks (bloom on
+            # vs off, straight vs resumed) compare actual rows, not counts
             summary["url_seen_digest"] = rows_digest(seen, ["url"])
             summary["fetch_log_digest"] = rows_digest(
                 log, ["round", "url", "status", "attempt"]

@@ -46,7 +46,9 @@ def _dsum(col: str):
 # share one tokenization pass within a session instead of each re-deriving
 # the lineage — exactly how q64's stored band table is meant to be consumed.
 # Keys include the applicationId so a new session never sees another
-# session's (unresolvable) checkpoints, and sf_dir so scales never mix.
+# session's (unresolvable) checkpoints, sf_dir so scales never mix, and the
+# size and mtime of every source parquet file so a fixture regenerated under
+# the same sf_dir gets fresh tiers instead of the old checkpoints.
 # Correctness is unchanged: shingle_table(d, n=n, toks=tokenized(d)) is
 # bit-identical to shingle_table(d, n=n) (pinned in tests/test_dedup_text).
 # --------------------------------------------------------------------------
@@ -54,8 +56,22 @@ def _dsum(col: str):
 _TIER_CACHE: dict = {}
 
 
+def _fingerprint(sf_dir: str) -> tuple:
+    """(path, size, mtime_ns) of every parquet file under ``sf_dir``."""
+    out = []
+    for root, _dirs, files in os.walk(sf_dir):
+        for fn in files:
+            if fn.endswith(".parquet"):
+                st = os.stat(os.path.join(root, fn))
+                out.append((os.path.join(root, fn), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
+
+
 def _tier(spark: SparkSession, sf_dir: str, kind: str, *extra):
-    return (spark.sparkContext.applicationId, os.path.abspath(sf_dir), kind, *extra)
+    return (
+        spark.sparkContext.applicationId, os.path.abspath(sf_dir), _fingerprint(sf_dir),
+        kind, *extra,
+    )
 
 
 def shared_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:

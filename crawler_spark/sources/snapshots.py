@@ -5,9 +5,10 @@ contract the engine needs — ATOMIC, RESUMABLE round commits with manifest
 metadata — directly over Parquet:
 
 * each round writes its tables under ``<ckpt>/round=NNNN/<table>/``
-* a ``MANIFEST.json`` is written LAST via tmp-file + ``os.replace`` (atomic
-  on POSIX); a round directory without a manifest is an uncommitted torn
-  write and is ignored + cleaned on resume
+* a ``MANIFEST.json`` is written LAST via tmp-file + fsync + ``os.replace``
+  + directory fsync (atomic on POSIX, and durable once the commit returns);
+  a round directory without a manifest is an uncommitted torn write and is
+  ignored + cleaned on resume
 * append-only tables (url_seen, dead_letter, fetch_log, lineage) are stored
   as per-round DELTAS and unioned on read — the Iceberg manifest-list
   pattern, so a round's commit cost is O(round output), not O(total state)
@@ -83,19 +84,16 @@ class RoundCommit:
 
         self._futs[name] = self._ex.submit(_write)
 
-    def commit(
-        self,
-        meta: Optional[dict] = None,
-        blobs: Optional[dict[str, bytes]] = None,
-        compacted: tuple[str, ...] = (),
-    ) -> dict:
+    def commit(self, meta: Optional[dict] = None, compacted: tuple[str, ...] = ()) -> dict:
         """Wait for every submitted write, then seal the manifest.
 
         If a write fails, the writes not yet started are cancelled and the
         running ones finish before the error propagates: no commit thread
         outlives a failed commit, so the torn round directory that resume
-        removes has no writer left."""
-        manifest: dict = {"round": self.rnd, "tables": {}, "blobs": [], "meta": meta or {}}
+        removes has no writer left.  The manifest's bytes and its directory
+        entry are fsync'd before this returns, so a committed round survives
+        a power loss."""
+        manifest: dict = {"round": self.rnd, "tables": {}, "meta": meta or {}}
         try:
             wait(self._futs.values(), return_when=FIRST_EXCEPTION)
             for name, fut in self._futs.items():
@@ -105,14 +103,17 @@ class RoundCommit:
                 }
         finally:
             self._ex.shutdown(wait=True, cancel_futures=True)
-        for fname, data in (blobs or {}).items():
-            with open(os.path.join(self.rdir, fname), "wb") as f:
-                f.write(data)
-            manifest["blobs"].append(fname)
         tmp = os.path.join(self.rdir, MANIFEST + ".tmp")
         with open(tmp, "w") as f:
             json.dump(manifest, f, indent=1)
+            f.flush()
+            os.fsync(f.fileno())
         os.replace(tmp, os.path.join(self.rdir, MANIFEST))  # commit
+        dfd = os.open(self.rdir, os.O_RDONLY)
+        try:
+            os.fsync(dfd)  # persist the rename itself
+        finally:
+            os.close(dfd)
         return manifest
 
 
@@ -121,7 +122,6 @@ def commit_round(
     rnd: int,
     tables: dict[str, DataFrame],
     meta: Optional[dict] = None,
-    blobs: Optional[dict[str, bytes]] = None,
     compacted: tuple[str, ...] = (),
 ) -> dict:
     """Write a round's tables, then the manifest (the atomic commit point).
@@ -134,14 +134,11 @@ def commit_round(
     Table writes run as CONCURRENT Spark jobs (RoundCommit thread pool);
     callers that can hand tables over incrementally should use RoundCommit
     directly so early tables overlap the rest of the round's driver work.
-    ``blobs`` are small driver-side sidecar files (e.g. serialized Bloom
-    bits) stored beside the tables under the same atomic manifest.
     """
-    n_workers = int(os.environ.get("SPARK_GRAFT_COMMIT_THREADS", len(tables)) or 1)
-    rc = RoundCommit(ckpt_dir, rnd, max_workers=n_workers)
+    rc = RoundCommit(ckpt_dir, rnd, max_workers=len(tables))
     for name, df in tables.items():
         rc.write(name, df)
-    return rc.commit(meta=meta, blobs=blobs, compacted=compacted)
+    return rc.commit(meta=meta, compacted=compacted)
 
 
 def committed_rounds(ckpt_dir: str) -> list[int]:
@@ -184,14 +181,6 @@ def read_manifest(ckpt_dir: str, rnd: int) -> Optional[dict]:
         return None
     with open(p) as f:
         return json.load(f)
-
-
-def read_blob(ckpt_dir: str, fname: str, rnd: int) -> Optional[bytes]:
-    p = os.path.join(_round_dir(ckpt_dir, rnd), fname)
-    if not os.path.exists(p):
-        return None
-    with open(p, "rb") as f:
-        return f.read()
 
 
 def read_deltas(

@@ -116,7 +116,6 @@ def run(args) -> dict:
         args.ckpt,
         cfg=cfg,
         use_bloom=not args.no_bloom,
-        seen_filter=args.seen_filter,
         ingest_payloads=args.ingest_payloads,
         proxy_pool=[p for p in (args.proxy_pool or "").split(",") if p] or None,
         trace_tasks=not args.no_trace,
@@ -221,9 +220,6 @@ def main() -> None:
                          "compaction rounds")
     ap.add_argument("--resume", action="store_true")
     ap.add_argument("--no-bloom", action="store_true")
-    ap.add_argument("--seen-filter", choices=["bloom", "cuckoo"], default="bloom",
-                    help="URL-seen fast path (north rule: Bloom/cuckoo); "
-                         "cuckoo supports member deletion for recrawl expiry")
     ap.add_argument("--proxy-pool", default=None,
                     help="comma-separated proxy ips; each fetch logs its pick as proxy_ip")
     ap.add_argument("--no-trace", action="store_true",

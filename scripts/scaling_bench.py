@@ -79,8 +79,7 @@ def source_sig(args) -> str:
     h.update(
         repr(
             (args.pages, args.hosts, args.seeds, args.px, args.fmts, args.max_links,
-             args.shards, args.rounds, args.round_seconds, args.burst, args.pin,
-             args.seen_filter)
+             args.shards, args.rounds, args.round_seconds, args.burst, args.pin)
         ).encode()
     )
     return h.hexdigest()
@@ -112,7 +111,6 @@ def run_level(cpus: int, fixtures: str, args, zpath: str, during: list | None = 
         "--conf", "spark.sql.parquet.columnarReaderBatchSize=256",
         "--conf", "spark.sql.execution.arrow.maxRecordsPerBatch=1024",
         os.path.join(REPO, "scripts", "crawl_job.py"),
-        "--seen-filter", args.seen_filter,
         "--fixtures", fixtures,
         "--ckpt", ckpt,
         "--rounds", str(args.rounds),
@@ -189,10 +187,6 @@ def main() -> None:
                          "BENCH_SCALING.json — for secondary pairs (e.g. the "
                          "2→8 saturation curve) that must never clobber the "
                          "accepted headline pair")
-    ap.add_argument("--seen-filter", choices=["bloom", "cuckoo"], default="bloom",
-                    help="url-seen fast-path backend for both legs (the "
-                         "cuckoo pair evidences the deletable filter costs "
-                         "nothing at scale vs the accepted Bloom pair)")
     ap.add_argument("--pin", action="store_true",
                     help="taskset each leg to exactly its core count "
                          "(cgroup-cpuset executor emulation; see run_level)")
@@ -225,8 +219,7 @@ def main() -> None:
         ~15 samples — a few percent of leg wall — do not burn the leg."""
         import statistics
 
-        suffix = "" if args.seen_filter == "bloom" else f"_{args.seen_filter}"
-        leg_cache = os.path.join(CACHE, f"scale_leg_{cpus}{suffix}.accepted.json")
+        leg_cache = os.path.join(CACHE, f"scale_leg_{cpus}.accepted.json")
         if args.reuse_legs and os.path.exists(leg_cache):
             with open(leg_cache) as f:
                 cached = json.load(f)
@@ -332,7 +325,6 @@ def main() -> None:
         "fmts": args.fmts,
         "rounds": args.rounds,
         "launcher": "spark-submit --py-files crawler_spark.zip",
-        "seen_filter": args.seen_filter,
         "pinned": bool(args.pin),
         # host-interference control (see cpu_probe): each leg bracketed by a
         # single- and 4-process SHA probe; par_eff4 well under ~0.9 means a

@@ -501,3 +501,32 @@ def test_emulator_feed_flow_golden(engine_run, golden):
     assert len(sim_feed) > 0
     # the flow actually followed load-more cursors past the seed chunk
     assert any("cursor=1" in u for u, _ in sim_feed)
+
+
+# Spark jobs of one 4-round crawl of the 96-page fixture after a one-round
+# warm-up crawl (the session's first crawl issues a few more), under the
+# session in conftest.py (local[4], 8 shuffle partitions).  A change that
+# adds a job to the crawl fails here; one that removes jobs lowers the pin.
+JOBS_PER_CRAWL = 158
+
+
+def test_jobs_per_crawl_pinned(spark, tmp_path):
+    from crawler_spark.plans.engine import CrawlEngine
+
+    fix = str(tmp_path / "fix")
+    generate(fix, n_pages=96, n_hosts=4, seed=7)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts are posted async
+        return set(tracker.getJobIdsForGroup())
+
+    def crawl(name, rounds):
+        before = jobs()
+        cfg = CrawlConfig(max_rounds=rounds)
+        assert CrawlEngine(spark, fix, str(tmp_path / name), cfg).run()["rounds"] == rounds
+        return len(jobs() - before)
+
+    crawl("warm", 1)
+    assert crawl("pinned", 4) <= JOBS_PER_CRAWL

@@ -168,19 +168,15 @@ def test_bloom_sized_from_observed_counts_fpp_bounded(spark):
 
 
 def test_commit_round_blobs_and_concurrent_writes(spark, tmpdir_path):
+    """commit_round writes every table concurrently under one manifest."""
     from crawler_spark.sources import snapshots as snap
 
     df_a = spark.range(100).withColumnRenamed("id", "a")
     df_b = spark.range(50).withColumnRenamed("id", "b")
-    manifest = snap.commit_round(
-        tmpdir_path, 0, {"ta": df_a, "tb": df_b}, meta={"x": 1},
-        blobs={"bloom.pkl": b"\x01\x02\x03"},
-    )
+    manifest = snap.commit_round(tmpdir_path, 0, {"ta": df_a, "tb": df_b}, meta={"x": 1})
     assert set(manifest["tables"]) == {"ta", "tb"}
-    assert manifest["blobs"] == ["bloom.pkl"]
     assert snap.read_full(spark, tmpdir_path, "ta", 0).count() == 100
-    assert snap.read_blob(tmpdir_path, "bloom.pkl", 0) == b"\x01\x02\x03"
-    assert snap.read_blob(tmpdir_path, "missing.bin", 0) is None
+    assert snap.read_full(spark, tmpdir_path, "tb", 0).count() == 50
 
 
 def test_round_commit_streaming_and_torn_write(spark, tmpdir_path):
@@ -192,10 +188,9 @@ def test_round_commit_streaming_and_torn_write(spark, tmpdir_path):
     rc = snap.RoundCommit(tmpdir_path, 0)
     rc.write("early", spark.range(10).withColumnRenamed("id", "a"))
     rc.write("late", spark.range(5).withColumnRenamed("id", "b"))
-    manifest = rc.commit(meta={"x": 1}, blobs={"s.bin": b"\x07"})
+    manifest = rc.commit(meta={"x": 1})
     assert set(manifest["tables"]) == {"early", "late"}
     assert snap.read_full(spark, tmpdir_path, "early", 0).count() == 10
-    assert snap.read_blob(tmpdir_path, "s.bin", 0) == b"\x07"
     assert snap.committed_rounds(tmpdir_path) == [0]
 
     # simulate a crash after an early write but before the manifest seal
@@ -261,6 +256,95 @@ def test_round_commit_failed_write_stops_siblings(tmpdir_path):
     assert "queued3" not in started  # cancelled before it could start
     assert snap.committed_rounds(tmpdir_path) == []
     assert len(snap.clean_uncommitted(tmpdir_path)) == 1
+
+
+def test_round_commit_fsyncs_manifest_and_directory(tmpdir_path, monkeypatch):
+    """The manifest's bytes are fsync'd before the rename that commits it,
+    and the round directory (which holds the rename) after it, both before
+    commit returns."""
+    import stat
+
+    from crawler_spark.sources import snapshots as snap
+
+    rc = snap.RoundCommit(tmpdir_path, 0)
+    manifest = os.path.join(rc.rdir, snap.MANIFEST)
+    synced = []
+    real_fsync = os.fsync
+
+    def spy(fd):
+        st = os.fstat(fd)
+        synced.append((st.st_ino, stat.S_ISDIR(st.st_mode), os.path.exists(manifest)))
+        real_fsync(fd)
+
+    monkeypatch.setattr(os, "fsync", spy)
+    rc.commit(meta={"x": 1})
+    assert synced == [
+        (os.stat(manifest).st_ino, False, False),  # the .tmp, before os.replace
+        (os.stat(rc.rdir).st_ino, True, True),  # the directory, after it
+    ]
+
+
+def _crawl(spark, fix, ckpt, rounds, resume=False, **kw):
+    from crawler_spark.plans.engine import CrawlEngine
+    from crawler_spark.plans.policy import CrawlConfig
+
+    return CrawlEngine(spark, fix, ckpt, CrawlConfig(max_rounds=rounds), **kw).run(resume)
+
+
+def test_engine_resume_rebuilds_incompatible_bloom(spark, tmpdir_path, monkeypatch):
+    """A checkpoint whose Bloom table is of another format (3 was the deleted
+    cuckoo backend's) or another bucketing is not read back: resume rebuilds
+    the filter from url_seen and ends at the same url_seen and fetch-log
+    rows as a straight crawl."""
+    import json
+    import shutil
+
+    from crawler_spark.fixtures import generate
+    from crawler_spark.sources import snapshots as snap
+
+    fix = os.path.join(tmpdir_path, "fix")
+    generate(fix, n_pages=96, n_hosts=4, seed=7)
+    straight_dir = os.path.join(tmpdir_path, "straight")
+    straight = _crawl(spark, fix, straight_dir, 4)
+    assert straight["rounds"] == 4
+    for rnd in range(4):
+        meta = snap.read_manifest(straight_dir, rnd)["meta"]
+        assert meta["bloom_format"] == dd.BLOOM_FORMAT
+        assert meta["bloom_buckets"] == 256
+
+    def two_rounds(name):  # rounds 0-1 of the straight crawl = a 2-round crawl
+        ckpt = os.path.join(tmpdir_path, name)
+        for rnd in (0, 1):
+            d = f"round={rnd:05d}"
+            shutil.copytree(os.path.join(straight_dir, d), os.path.join(ckpt, d))
+        return ckpt
+
+    builds = []
+    real_build = dd.bloom_build
+    monkeypatch.setattr(
+        dd, "bloom_build", lambda *a, **kw: builds.append(a[1:]) or real_build(*a, **kw)
+    )
+    # a compatible resume reads the committed table back
+    _crawl(spark, fix, two_rounds("ok"), 3, resume=True)
+    assert builds == []
+
+    foreign = two_rounds("foreign")
+    manifest = snap.read_manifest(foreign, 1)
+    manifest["meta"]["bloom_format"] = 3
+    with open(os.path.join(foreign, "round=00001", snap.MANIFEST), "w") as f:
+        json.dump(manifest, f)
+    resumed = {"foreign": _crawl(spark, fix, foreign, 4, resume=True)}
+    assert builds == [(256, 0.01)]
+
+    rebucketed = two_rounds("rebucketed")
+    resumed["rebucketed"] = _crawl(spark, fix, rebucketed, 4, resume=True, bloom_buckets=64)
+    assert builds == [(256, 0.01), (64, 0.01)]
+    assert snap.read_manifest(rebucketed, 3)["meta"]["bloom_buckets"] == 64
+
+    for case, summary in resumed.items():
+        assert summary["rounds"] == 2, case
+        for key in ("url_seen_digest", "fetch_log_digest"):
+            assert summary[key] == straight[key], (case, key)
 
 
 def test_engine_ingest_payloads(spark, tmpdir_path):

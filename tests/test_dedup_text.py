@@ -180,3 +180,24 @@ def test_stored_band_table_composes_with_miner(spark):
     assert sorted(map(tuple, mined.collect())) == sorted(map(tuple, fresh.collect()))
     # the exact-dup pair (a, d) must survive verification in both lineages
     assert any(r.doc_a == "a" and r.doc_b == "d" for r in mined.collect())
+
+
+def test_shared_tokens_follow_a_regenerated_fixture(spark, tmp_path):
+    """A documents table rewritten under the same directory in one session
+    gets freshly tokenized, not the checkpoint of the old content."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from crawler_spark.queries import shared_tokens
+
+    def write(texts):
+        table = pa.table({"doc_id": [f"d{i}" for i in range(len(texts))], "text": texts})
+        pq.write_table(table, str(tmp_path / "documents.parquet"))
+
+    def tokens():
+        return sorted((r.doc_id, tuple(r.toks)) for r in shared_tokens(spark, str(tmp_path)).collect())
+
+    write(["the cat sat", "a dog ran"])
+    assert tokens() == [("d0", ("the", "cat", "sat")), ("d1", ("a", "dog", "ran"))]
+    write(["regenerated fixture text"])
+    assert tokens() == [("d0", ("regenerated", "fixture", "text"))]
