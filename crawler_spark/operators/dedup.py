@@ -49,7 +49,7 @@ the fast path on or off (tested in tests/test_dedup.py).
 from __future__ import annotations
 
 import math
-from typing import NamedTuple, Optional
+from typing import NamedTuple
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -66,7 +66,6 @@ __all__ = [
     "bloom_probe_update",
     "admit_new_bloom",
     "Admission",
-    "counted",
     "bloom_admit",
     "BLOOM_FORMAT",
 ]
@@ -357,20 +356,13 @@ def admit_new_bloom(
 class Admission(NamedTuple):
     """One round's URL-seen admission, materialized: ``admitted`` is
     persisted and counted; ``state_next`` is the next filter state (lazy,
-    reading only persisted rows) or None; ``cached`` lists the frames to
-    unpersist once ``state_next`` is written."""
+    reading only persisted rows); ``cached`` lists the frames to unpersist
+    once ``state_next`` is written."""
 
     admitted: DataFrame
-    state_next: Optional[DataFrame]
+    state_next: DataFrame
     n_admitted: int
     cached: tuple
-
-
-def counted(admitted: DataFrame) -> Admission:
-    """Persist and count ``admitted`` (one job) — the Admission of the exact
-    path, which keeps no filter state."""
-    admitted = admitted.persist()
-    return Admission(admitted, None, admitted.count(), (admitted,))
 
 
 def bloom_admit(

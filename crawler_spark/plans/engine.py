@@ -20,8 +20,9 @@ Spark-first re-expression of the reference's poll-loop dataflow
              → robots filter → bloom+anti-join dedup (U2) → admitted with
              wave = round+1
            ─ atomic snapshot commit (sources.snapshots, T6/T7): frontier,
-             url_seen Δ, dead_letter Δ, fetch_log Δ, story_results Δ,
-             per-partition lineage Δ
+             bloom, url_seen Δ, dead_letter Δ, fetch_log Δ, story_results Δ,
+             task_trace Δ, payload_log Δ; the manifest's meta carries the
+             round's per-partition lineage rows
 
 The reference's per-URL poller threads (TaskWorker.java:174-190) become
 iteration over rounds; its Redis queues become the frontier table; its
@@ -93,13 +94,10 @@ class CrawlEngine:
         fix_dir: str,
         ckpt_dir: str,
         cfg: Optional[CrawlConfig] = None,
-        use_bloom: bool = True,
         bloom_buckets: int = 256,
-        bloom_fpp: float = 0.01,
         ingest_payloads: bool = False,
         compact_every: int = 16,
         proxy_pool: Optional[list] = None,
-        trace_tasks: bool = True,
         seed_source: str = "files",
         seeds_df: Optional[DataFrame] = None,
     ):
@@ -122,9 +120,8 @@ class CrawlEngine:
         # recrawl path feeds operators.warc.refetch_seeds(cdx_diff(...)) here
         self.seeds_df = seeds_df
         self.cfg = cfg or CrawlConfig()
-        self.use_bloom = use_bloom
         self.bloom_buckets = bloom_buckets
-        self.bloom_fpp = bloom_fpp
+        self.bloom_fpp = dd.DEFAULT_FPP
         # fold url_seen's delta history into a full snapshot every K rounds
         # (read_deltas then unions O(K) dirs instead of O(rounds) — the
         # file-listing/plan-width fix for thousand-round crawls); 0 disables
@@ -134,12 +131,6 @@ class CrawlEngine:
         # is the image-crawler analog of U2 over payloads); results land in
         # the per-round payload_log delta
         self.ingest_payloads = ingest_payloads
-        # per-task trace (reference worker.trace, Crawlers.java:80): one
-        # append-only event per task state change — submitted / per-attempt
-        # fetch status (death reason in ``detail``) / TIMEOUT / resubmitted —
-        # as a per-round delta; execution_paths() is the readback
-        # (SavePointPlanner.java:248-266 reads paths from the trace)
-        self.trace_tasks = trace_tasks
         # per-bucket Bloom bits as a DataFrame beside the checkpoint — built,
         # updated, and probed executor-side (never collected or broadcast)
         self._bloom: Optional[DataFrame] = None
@@ -414,12 +405,10 @@ class CrawlEngine:
     def _admit(self, candidates: DataFrame, url_seen: DataFrame) -> dd.Admission:
         """Admitted candidates, persisted and counted, plus the next URL-seen
         filter (lazy: the commit write is its single materialization)."""
-        cands = dd.with_url_hash(candidates)
-        if self.use_bloom and self._bloom is not None:
-            return dd.bloom_admit(
-                cands, url_seen, self._bloom, self.bloom_buckets, self.bloom_fpp
-            )
-        return dd.counted(dd.admit_new_exact(cands, url_seen))
+        return dd.bloom_admit(
+            dd.with_url_hash(candidates), url_seen, self._bloom, self.bloom_buckets,
+            self.bloom_fpp,
+        )
 
     def _bloom_init(self, url_seen: DataFrame, resume_round: Optional[int]) -> None:
         """Load the persisted Bloom table (resume) or build it from url_seen.
@@ -435,8 +424,6 @@ class CrawlEngine:
         ORs only the admitted delta's hashes into the bucket bits (O(Δ),
         executor-side).
         """
-        if not self.use_bloom:
-            return
         if resume_round is not None:
             meta = (snap.read_manifest(self.ckpt_dir, resume_round) or {}).get("meta", {})
             compatible = (
@@ -465,8 +452,6 @@ class CrawlEngine:
         never wrong answers) is rebuilt from url_seen with count-derived
         capacity; the rebuild lineage materializes inside the NEXT round's
         commit."""
-        if not (self.use_bloom and self._bloom is not None):
-            return
         if rnd % SAT_CHECK_EVERY != SAT_CHECK_EVERY - 1:
             return
         sat = [
@@ -576,7 +561,13 @@ class CrawlEngine:
         return out
 
     def _trace_events(self, df: DataFrame, rnd: int, state, attempt=None, detail=None):
-        """Project a frontier/classified-shaped DF into task_trace rows."""
+        """Project a frontier/classified-shaped DF into task_trace rows.
+
+        The per-task trace (reference worker.trace, Crawlers.java:80) holds
+        one append-only event per task state change — submitted / recrawl /
+        resubmitted / per-attempt fetch status (death reason in ``detail``)
+        / TIMEOUT — as a per-round delta; execution_paths() is the readback
+        (SavePointPlanner.java:248-266 reads paths from the trace)."""
         return df.select(
             F.lit(rnd).alias("round"),
             "url",
@@ -615,8 +606,7 @@ class CrawlEngine:
                     .select(*FRONTIER_COLS)
                 )
                 frontier = frontier.unionByName(refetch)
-                if self.trace_tasks:
-                    pending_trace = self._trace_events(refetch, start_round, "recrawl")
+                pending_trace = self._trace_events(refetch, start_round, "recrawl")
         else:
             frontier = self._seed_frontier()
             url_seen = dd.with_url_hash(frontier.select("url")).withColumn(
@@ -624,8 +614,8 @@ class CrawlEngine:
             )
             seed_seen = url_seen
             self._bloom_init(url_seen, None)
-            if self.trace_tasks:  # seed plan submission events (wave 0)
-                pending_trace = self._trace_events(frontier, 0, "submitted")
+            # seed plan submission events (wave 0)
+            pending_trace = self._trace_events(frontier, 0, "submitted")
 
         rnd = start_round
         # row-count ESTIMATES for output-file sizing (_wparts).  Upper bounds
@@ -649,16 +639,28 @@ class CrawlEngine:
             eligible = frontier.filter(F.col("wave") <= rnd)
             batch = select_fetch_batch(eligible, self.robots, cfg)
             classified = self._classify(batch).persist()
-            # one materializing job returns every per-round tally the commit
-            # planner needs (round 2 counted then re-aggregated per table)
-            stats = classified.agg(
-                F.count("*").alias("n"),
-                F.sum(F.col("dead_reason").isNotNull().cast("long")).alias("n_dead"),
-                F.sum((F.col("status") == P.ST_FETCHED).cast("long")).alias("n_fetched"),
-            ).first()
-            n_selected = stats["n"]
-            n_dead_rows = stats["n_dead"] or 0
-            n_fetched_rows = stats["n_fetched"] or 0
+            # per-partition lineage beside the checkpoint (north_rule): one
+            # collect of at most one row per partition materializes the
+            # classification and yields every tally the commit planner needs;
+            # wall_ms stamps time from round start to classification
+            rows = (
+                classified.groupBy(F.spark_partition_id().alias("partition_id"))
+                .agg(
+                    F.count("*").alias("urls_in"),
+                    F.sum((F.col("status") == P.ST_FETCHED).cast("long")).alias("fetched"),
+                    F.sum(F.col("retry").cast("long")).alias("failed"),
+                    F.sum(F.col("dead_reason").isNotNull().cast("long")).alias("dead"),
+                )
+                .collect()
+            )
+            wall_ms = int((time.time() - t0) * 1000)
+            lineage = [
+                {**r.asDict(), "round": rnd, "wall_ms": wall_ms}
+                for r in sorted(rows, key=lambda r: r["partition_id"])
+            ]
+            n_selected = sum(r["urls_in"] for r in lineage)
+            n_dead_rows = sum(r["dead"] for r in lineage)
+            n_fetched_rows = sum(r["fetched"] for r in lineage)
             if n_selected == 0:
                 dead_all = snap.read_deltas(spark, self.ckpt_dir, "dead_letter", rnd)
                 red = self._redrive(dead_all, rnd)
@@ -667,11 +669,11 @@ class CrawlEngine:
                     classified.unpersist()
                     break
                 frontier = frontier.unionByName(red)
-                if self.trace_tasks:  # recycle-bin re-drive events (U1)
-                    ev = self._trace_events(red, rnd, "resubmitted")
-                    pending_trace = (
-                        ev if pending_trace is None else pending_trace.unionByName(ev)
-                    )
+                # recycle-bin re-drive events (U1)
+                ev = self._trace_events(red, rnd, "resubmitted")
+                pending_trace = (
+                    ev if pending_trace is None else pending_trace.unionByName(ev)
+                )
                 classified.unpersist()
                 continue
 
@@ -719,22 +721,8 @@ class CrawlEngine:
                 F.coalesce(F.col("landing"), F.lit("no")).alias("landing"),
                 "records",
             )
-            # per-partition lineage metrics beside the checkpoint (north_rule);
-            # wall_ms stamps time from round start to classification
-            lineage = (
-                classified.groupBy(F.spark_partition_id().alias("partition_id"))
-                .agg(
-                    F.count("*").alias("urls_in"),
-                    F.sum((F.col("status") == P.ST_FETCHED).cast("long")).alias("fetched"),
-                    F.sum(F.col("retry").cast("long")).alias("failed"),
-                    F.sum(F.col("dead_reason").isNotNull().cast("long")).alias("dead"),
-                )
-                .withColumn("round", F.lit(rnd))
-                .withColumn("wall_ms", F.lit(int((time.time() - t0) * 1000)))
-            )
             # classification-derived tables: inputs are final -> write now
             rc.write("fetch_log", fetch_log.coalesce(self._wparts(n_selected)))
-            rc.write("lineage", lineage.coalesce(self._wparts(n_selected)))
             if n_fetched_rows:
                 rc.write("story_results", story_results.coalesce(self._wparts(n_selected)))
                 if self.ingest_payloads:
@@ -775,7 +763,6 @@ class CrawlEngine:
             # materialized here, before the concurrent commit writes
             admission = self._admit(candidates, url_seen)
             admitted, n_admitted = admission.admitted, admission.n_admitted
-            bloom_next = admission.state_next
             seen_delta = admitted.select("url", "url_hash", F.lit(rnd + 1).alias("round"))
             folded_seeds = seed_seen is not None
             if folded_seeds:  # first commit carries the seed membership
@@ -839,13 +826,10 @@ class CrawlEngine:
                         )
                     )
                     frontier_next = frontier_next.unionByName(resubmit)
-                    if self.trace_tasks:
-                        ev = self._trace_events(resubmit, rnd, "recrawl")
-                        pending_trace = (
-                            ev
-                            if pending_trace is None
-                            else pending_trace.unionByName(ev)
-                        )
+                    ev = self._trace_events(resubmit, rnd, "recrawl")
+                    pending_trace = (
+                        ev if pending_trace is None else pending_trace.unionByName(ev)
+                    )
                     summary["recrawled"] = summary.get("recrawled", 0) + n_recrawl
             # size committed files by row volume, not shuffle fan-out.
             # KNOWN-EMPTY deltas are skipped outright: read_deltas tolerates a
@@ -866,43 +850,41 @@ class CrawlEngine:
                 )
             if n_dead_rows + n_timed_out:
                 rc.write("dead_letter", dead_delta.coalesce(self._wparts(n_selected)))
-            if self.trace_tasks:
-                # per-task trace: one event per state change this round —
-                # fetch attempts (status + attempt; death reason in detail),
-                # admissions, deadline timeouts, plus any buffered seed /
-                # re-drive submissions
-                trace = self._trace_events(
-                    classified, rnd, F.col("status"), attempt="attempt",
-                    detail="dead_reason",
-                ).unionByName(self._trace_events(admitted, rnd, "submitted"))
-                if timed_out is not None and n_timed_out:
-                    trace = trace.unionByName(
-                        self._trace_events(
-                            timed_out.withColumn("detail", F.lit("timeout")),
-                            rnd, "TIMEOUT", attempt="attempt", detail="detail",
-                        )
+            # per-task trace: one event per state change this round — fetch
+            # attempts (status + attempt; death reason in detail), admissions,
+            # deadline timeouts, plus any buffered seed / re-drive submissions
+            trace = self._trace_events(
+                classified, rnd, F.col("status"), attempt="attempt",
+                detail="dead_reason",
+            ).unionByName(self._trace_events(admitted, rnd, "submitted"))
+            if timed_out is not None and n_timed_out:
+                trace = trace.unionByName(
+                    self._trace_events(
+                        timed_out.withColumn("detail", F.lit("timeout")),
+                        rnd, "TIMEOUT", attempt="attempt", detail="detail",
                     )
-                if pending_trace is not None:
-                    trace = trace.unionByName(pending_trace)
-                    pending_trace = None
-                rc.write(
-                    "task_trace",
-                    trace.coalesce(self._wparts(n_selected + n_admitted, cached=False)),
                 )
-            meta = {"selected": n_selected, "wall_s": time.time() - t0}
-            bloom_written = False
-            if bloom_next is not None:
-                meta["bloom_format"] = dd.BLOOM_FORMAT
-                meta["bloom_buckets"] = self.bloom_buckets
-                if n_admitted or self._bloom_dirty or self._bloom_round is None:
-                    # content changed (new hashes OR'd in / saturation rebuild)
-                    # → materialize; otherwise point the manifest at the last
-                    # written table and skip the n_buckets-row bitset write
-                    rc.write("bloom", bloom_next)
-                    bloom_written = True
-                    meta["bloom_round"] = rnd
-                else:
-                    meta["bloom_round"] = self._bloom_round
+            if pending_trace is not None:
+                trace = trace.unionByName(pending_trace)
+                pending_trace = None
+            rc.write(
+                "task_trace",
+                trace.coalesce(self._wparts(n_selected + n_admitted, cached=False)),
+            )
+            meta = {
+                "selected": n_selected,
+                "wall_s": time.time() - t0,
+                "lineage": lineage,
+                "bloom_format": dd.BLOOM_FORMAT,
+                "bloom_buckets": self.bloom_buckets,
+            }
+            # the bloom table is rewritten only when its content changed (new
+            # hashes OR'd in / saturation rebuild); otherwise the manifest
+            # points at the last written table and skips the n_buckets-row write
+            bloom_written = bool(n_admitted or self._bloom_dirty or self._bloom_round is None)
+            if bloom_written:
+                rc.write("bloom", admission.state_next)
+            meta["bloom_round"] = rnd if bloom_written else self._bloom_round
             rc.commit(meta=meta, compacted=("url_seen",) if compact_seen else ())
             summary["rounds_detail"].append(
                 {"round": rnd, "selected": n_selected, "wall_s": round(time.time() - t0, 3)}
@@ -916,13 +898,12 @@ class CrawlEngine:
             # re-read committed state: keeps every round's plan lineage O(1)
             frontier = snap.read_full(spark, self.ckpt_dir, "frontier", rnd)
             url_seen = snap.read_deltas(spark, self.ckpt_dir, "url_seen", rnd)
-            if bloom_next is not None:
-                if bloom_written:
-                    self._bloom = snap.read_full(spark, self.ckpt_dir, "bloom", rnd)
-                    self._bloom_round = rnd
-                    self._bloom_dirty = False
-                # else: _bloom already reads the last written parquet table
-                self._bloom_maybe_rebuild(url_seen, rnd)
+            if bloom_written:
+                self._bloom = snap.read_full(spark, self.ckpt_dir, "bloom", rnd)
+                self._bloom_round = rnd
+                self._bloom_dirty = False
+            # else: _bloom already reads the last written parquet table
+            self._bloom_maybe_rebuild(url_seen, rnd)
             summary["selected"] += n_selected
             summary["rounds"] = rnd + 1 - start_round
             frontier_est += n_admitted + n_recrawl
@@ -937,8 +918,8 @@ class CrawlEngine:
             summary["dead"] = dead_all.count() if dead_all is not None else 0
             seen = snap.read_deltas(spark, self.ckpt_dir, "url_seen", last)
             summary["url_seen"] = seen.count()
-            # order-independent row digests: equivalence checks (bloom on
-            # vs off, straight vs resumed) compare actual rows, not counts
+            # order-independent row digests: equivalence checks (straight
+            # vs resumed, across bucketings) compare actual rows, not counts
             summary["url_seen_digest"] = rows_digest(seen, ["url"])
             summary["fetch_log_digest"] = rows_digest(
                 log, ["round", "url", "status", "attempt"]
@@ -986,9 +967,20 @@ class CrawlEngine:
         last = snap.latest_round(self.ckpt_dir)
         return snap.read_deltas(self.spark, self.ckpt_dir, "dead_letter", last)
 
+    LINEAGE_SCHEMA = (
+        "partition_id int, urls_in long, fetched long, failed long, dead long, "
+        "round int, wall_ms int"
+    )
+
     def lineage(self) -> DataFrame:
-        last = snap.latest_round(self.ckpt_dir)
-        return snap.read_deltas(self.spark, self.ckpt_dir, "lineage", last)
+        """Per-partition round metrics of every committed round, read from
+        the round manifests' ``meta["lineage"]``."""
+        rows = [
+            row
+            for rnd in snap.committed_rounds(self.ckpt_dir)
+            for row in snap.read_manifest(self.ckpt_dir, rnd)["meta"].get("lineage", [])
+        ]
+        return self.spark.createDataFrame(rows, self.LINEAGE_SCHEMA)
 
     def story_results(self) -> DataFrame:
         """Structdata per fetched (url, extractor) — the exporters' input."""
@@ -1002,16 +994,21 @@ class CrawlEngine:
 
     def execution_paths(self) -> DataFrame:
         """(url, path) — each URL's ordered event history, reconstructed from
-        the trace (the SavePointPlanner.java:248-266 readback).  Within a
-        round, (re)submissions order before fetch outcomes."""
-        tr = self.task_trace()
+        the trace (the SavePointPlanner.java:248-266 readback)."""
+        return self._paths(self.task_trace())
+
+    @staticmethod
+    def _paths(trace: DataFrame) -> DataFrame:
+        """Per-URL event paths of ``trace``.  Within a round, submissions
+        order before (re)submissions and recrawls, and those before fetch
+        outcomes."""
         seq = (
             F.when(F.col("state") == "submitted", F.lit(0))
-            .when(F.col("state") == "resubmitted", F.lit(1))
+            .when(F.col("state").isin("resubmitted", "recrawl"), F.lit(1))
             .otherwise(F.lit(2))
         )
         ev = F.struct(F.col("round"), seq.alias("seq"), F.col("state"), F.col("attempt"))
-        return tr.groupBy("url").agg(F.array_sort(F.collect_list(ev)).alias("path"))
+        return trace.groupBy("url").agg(F.array_sort(F.collect_list(ev)).alias("path"))
 
     # ------------------------------------------------- plan-status readback
     # The reference's only REST/monitoring surface is
@@ -1021,9 +1018,7 @@ class CrawlEngine:
     # state between rounds is the committed snapshot, so the readback is a
     # pure function of it: story key = task_url (the reference's story name),
     # url→story mapping = the task_trace multimap (STORY_TRACE analog),
-    # pending membership = the latest committed frontier.  Requires
-    # trace_tasks=True (the default), like the reference requires the trace
-    # multimap to exist.
+    # pending membership = the latest committed frontier.
 
     _SUBMIT_STATES = ("submitted", "resubmitted", "recrawl")
 
@@ -1127,18 +1122,9 @@ class CrawlEngine:
         round, attempt), ...]} — each task's ordered event history
         (getTasksOfStory, SavePointPlanner.java:248-266; the reference pairs
         (fromUrl, status) per trace entry)."""
-        tr = self.task_trace().filter(F.col("task_url") == task_url)
-        seq = (
-            F.when(F.col("state") == "submitted", F.lit(0))
-            .when(F.col("state").isin("resubmitted", "recrawl"), F.lit(1))
-            .otherwise(F.lit(2))
-        )
-        ev = F.struct(F.col("round"), seq.alias("seq"), F.col("state"), F.col("attempt"))
-        rows = (
-            tr.groupBy("url")
-            .agg(F.array_sort(F.collect_list(ev)).alias("path"))
-            .collect()
-        )
+        rows = self._paths(
+            self.task_trace().filter(F.col("task_url") == task_url)
+        ).collect()
         return {
             r.url: [(e.state, e.round, e.attempt) for e in r.path] for r in rows
         }

@@ -9,9 +9,13 @@ metadata — directly over Parquet:
   + directory fsync (atomic on POSIX, and durable once the commit returns);
   a round directory without a manifest is an uncommitted torn write and is
   ignored + cleaned on resume
-* append-only tables (url_seen, dead_letter, fetch_log, lineage) are stored
-  as per-round DELTAS and unioned on read — the Iceberg manifest-list
-  pattern, so a round's commit cost is O(round output), not O(total state)
+* append-only tables (url_seen, dead_letter, fetch_log, story_results,
+  payload_log, task_trace) are stored as per-round DELTAS and unioned on
+  read — the Iceberg manifest-list pattern, so a round's commit cost is
+  O(round output), not O(total state)
+* small per-round facts (tallies, Bloom geometry, per-partition lineage)
+  ride the manifest's ``meta`` instead of a table, so they commit with the
+  manifest itself
 * the mutable frontier is stored in full each round (it is the working set;
   at 100 TB scale this becomes an Iceberg row-delta table, the layout and
   commit protocol here are deliberately swap-compatible)
@@ -34,8 +38,8 @@ from pyspark.sql import DataFrame, SparkSession
 MANIFEST = "MANIFEST.json"
 FULL_TABLES = ("frontier", "bloom")
 DELTA_TABLES = (
-    "url_seen", "dead_letter", "fetch_log", "story_results", "lineage",
-    "payload_log", "task_trace",
+    "url_seen", "dead_letter", "fetch_log", "story_results", "payload_log",
+    "task_trace",
 )
 
 

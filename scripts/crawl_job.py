@@ -19,8 +19,9 @@ scripts/scaling_bench.py can compute N→4N scaling efficiency.
 The measured span covers the full per-round dataflow of plans/engine.py
 (politeness-ranked batch selection, fetch-join classification, out-link
 expansion + prepare_url canonicalization, bloom+anti-join dedup, snapshot
-commit with per-partition lineage) and, with --verify-payloads, the
-image-decode invariant pass (PSNR/phash) over every fetched URL.
+commit with the per-task trace and, in the round manifest, per-partition
+lineage) and, with --verify-payloads, the image-decode invariant pass
+(PSNR/phash) over every fetched URL.
 """
 
 from __future__ import annotations
@@ -115,10 +116,8 @@ def run(args) -> dict:
         args.fixtures,
         args.ckpt,
         cfg=cfg,
-        use_bloom=not args.no_bloom,
         ingest_payloads=args.ingest_payloads,
         proxy_pool=[p for p in (args.proxy_pool or "").split(",") if p] or None,
-        trace_tasks=not args.no_trace,
         seeds_df=seeds_df,
     )
 
@@ -219,11 +218,8 @@ def main() -> None:
                          "this re-enter the frontier at PRIORITY_RECRAWL on "
                          "compaction rounds")
     ap.add_argument("--resume", action="store_true")
-    ap.add_argument("--no-bloom", action="store_true")
     ap.add_argument("--proxy-pool", default=None,
                     help="comma-separated proxy ips; each fetch logs its pick as proxy_ip")
-    ap.add_argument("--no-trace", action="store_true",
-                    help="skip the per-task trace delta (worker.trace parity is ON by default)")
     ap.add_argument("--ingest-payloads", action="store_true",
                     help="decode+phash+PSNR every fetched image inside the round")
     ap.add_argument("--verify-payloads", action="store_true",
