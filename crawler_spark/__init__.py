@@ -3,9 +3,10 @@
 Brand-new engine with the capabilities of the reference crawler
 (totyumengr/crawler, surveyed in SURVEY.md), re-expressed Spark-first:
 
-- frontier / url_seen / dead_letter as partitioned Parquet tables with
+- frontier / url_seen / task_trace as partitioned Parquet tables with
   Iceberg-style atomic snapshot manifests that also carry per-partition
-  lineage (crawler_spark.sources.snapshots)
+  lineage; the recycle bin is the trace's death events
+  (crawler_spark.sources.snapshots)
 - politeness + priority fetch-batch selection as salted window ranking
   (crawler_spark.operators.politeness)
 - URL-seen dedup as partitioned bloom fast-path + exact anti-join

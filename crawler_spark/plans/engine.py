@@ -20,16 +20,17 @@ Spark-first re-expression of the reference's poll-loop dataflow
              → robots filter → bloom+anti-join dedup (U2) → admitted with
              wave = round+1
            ─ atomic snapshot commit (sources.snapshots, T6/T7): frontier,
-             bloom, url_seen Δ, dead_letter Δ, fetch_log Δ, story_results Δ,
-             task_trace Δ, payload_log Δ; the manifest's meta carries the
-             round's per-partition lineage rows
+             bloom, url_seen Δ, fetch_log Δ, story_results Δ, task_trace Δ,
+             payload_log Δ; the manifest's meta carries the round's
+             per-partition lineage rows
 
 The reference's per-URL poller threads (TaskWorker.java:174-190) become
 iteration over rounds; its Redis queues become the frontier table; its
 savepoint (SavePointPlanner.java:174-183) becomes the round manifest.
 Recycle-bin re-drive (U1, SavePointPlanner.java:106-126) triggers when the
 frontier drains: retriable dead tasks re-enter as generation+1, capped at
-MAX_BIN_GENERATIONS.
+MAX_BIN_GENERATIONS.  The bin is a view of the task trace (its death
+events, reason in ``detail``), so each death is stored once.
 
 Scale discipline (axes A+B):
 * frontier rows carry only url/keys — image bytes NEVER enter the loop
@@ -98,26 +99,16 @@ class CrawlEngine:
         ingest_payloads: bool = False,
         compact_every: int = 16,
         proxy_pool: Optional[list] = None,
-        seed_source: str = "files",
         seeds_df: Optional[DataFrame] = None,
     ):
         self.spark = spark
         self.fix_dir = fix_dir
         self.ckpt_dir = ckpt_dir
-        # "files" reads seeds.parquet (reference S1/S2); "sitemaps" resolves
-        # the fixture's sitemap tree (sources.sitemaps); "robots" runs the
-        # FULL web-native discovery chain — robots.txt bodies → RFC 9309
-        # `Sitemap:` directives → sitemap tree → seeds (requires a raw-body
-        # robots.parquet).  Fixtures encode seed order in lastmod so all
-        # sources yield the identical frontier (golden-tested).  Sitemap
-        # seeds carry no cookies (the protocol has no such field).
-        if seed_source not in ("files", "sitemaps", "robots"):
-            raise ValueError(
-                f"seed_source must be 'files', 'sitemaps' or 'robots', got {seed_source!r}")
-        self.seed_source = seed_source
-        # direct seed intake (overrides seed_source): a DataFrame with the
-        # seeds.parquet contract (seed_id, url[, cookies]) — the incremental
-        # recrawl path feeds operators.warc.refetch_seeds(cdx_diff(...)) here
+        # direct seed intake (replaces seeds.parquet): a DataFrame with the
+        # seeds.parquet contract (seed_id, url[, cookies]) — the sitemap and
+        # robots discovery chains (sources.sitemaps) seed a fresh crawl here,
+        # and the incremental recrawl path feeds
+        # operators.warc.refetch_seeds(cdx_diff(...)) to a resumed one
         self.seeds_df = seeds_df
         self.cfg = cfg or CrawlConfig()
         self.bloom_buckets = bloom_buckets
@@ -199,28 +190,8 @@ class CrawlEngine:
 
     def _seed_frontier(self) -> DataFrame:
         """Seeds → wave-0 frontier (S1; priority = seed order, O2 slicing)."""
-        if self.seeds_df is not None:
-            seeds = self.seeds_df
-        elif self.seed_source == "sitemaps":
-            from crawler_spark.sources.sitemaps import fixture_seed_table
-
-            seeds = fixture_seed_table(self.spark, self.fix_dir)
-        elif self.seed_source == "robots":
-            # full discovery chain: robots.txt bodies → Sitemap: directives
-            # → sitemap tree → seeds (the order a real crawl runs in)
-            from crawler_spark.sources.sitemaps import (
-                expand_sitemap_tree, roots_from_robots, seeds_from_sitemaps)
-
-            raw = self.spark.read.parquet(os.path.join(self.fix_dir, "robots.parquet"))
-            if "robots_txt" not in raw.columns:
-                raise ValueError(
-                    "seed_source='robots' needs a raw-body robots.parquet "
-                    "(robots_txt column) carrying Sitemap: directives")
-            bodies = self.spark.read.parquet(
-                os.path.join(self.fix_dir, "sitemaps.parquet"))
-            seeds = seeds_from_sitemaps(
-                expand_sitemap_tree(bodies, roots_from_robots(raw)))
-        else:
+        seeds = self.seeds_df
+        if seeds is None:
             seeds = self.spark.read.parquet(os.path.join(self.fix_dir, "seeds.parquet"))
         cookies = (
             F.coalesce(F.col("cookies"), F.lit(""))
@@ -659,11 +630,9 @@ class CrawlEngine:
                 for r in sorted(rows, key=lambda r: r["partition_id"])
             ]
             n_selected = sum(r["urls_in"] for r in lineage)
-            n_dead_rows = sum(r["dead"] for r in lineage)
             n_fetched_rows = sum(r["fetched"] for r in lineage)
             if n_selected == 0:
-                dead_all = snap.read_deltas(spark, self.ckpt_dir, "dead_letter", rnd)
-                red = self._redrive(dead_all, rnd)
+                red = self._redrive(self.dead_letter(), rnd)
                 n_red = red.count() if red is not None else 0
                 if n_red == 0:
                     classified.unpersist()
@@ -705,12 +674,6 @@ class CrawlEngine:
                 # timezone-free, so watermarks/windows are exact anywhere.
                 F.lit(round_epoch).alias("event_epoch"),
             )
-            dead_delta = classified.filter(F.col("dead_reason").isNotNull()).select(
-                "url",
-                F.col("dead_reason").alias("reason"),
-                "generation",
-                F.lit(rnd).alias("round"),
-            )
             fetched = classified.filter(F.col("status") == P.ST_FETCHED)
             # structdata story results (consumed by the exporter family K1-K5)
             story_results = fetched.select(
@@ -738,12 +701,6 @@ class CrawlEngine:
                     .persist()
                 )
                 n_timed_out = timed_out.count()
-                dead_delta = dead_delta.unionByName(
-                    timed_out.select(
-                        "url", F.lit("timeout").alias("reason"), "generation",
-                        F.lit(rnd).alias("round"),
-                    )
-                )
             # frontier bookkeeping: selected non-retry rows leave; retries bump
             # attempt.  sel is batch-sized (≤ Σ host budgets) — broadcast it so
             # a stats-less plan never sort-merge-shuffles the full frontier.
@@ -834,8 +791,7 @@ class CrawlEngine:
             # size committed files by row volume, not shuffle fan-out.
             # KNOWN-EMPTY deltas are skipped outright: read_deltas tolerates a
             # missing per-round table dir, and every skipped table is a whole
-            # Spark write job saved from the round's critical path (dead_letter
-            # and payload_log are 0-row on most healthy rounds).
+            # Spark write job saved from the round's critical path.
             seen_rows = n_admitted + (seen_est if (folded_seeds or compact_seen) else 0)
             rc.write(
                 "frontier",
@@ -848,11 +804,11 @@ class CrawlEngine:
                         self._wparts(seen_rows, cached=not (folded_seeds or compact_seen))
                     ),
                 )
-            if n_dead_rows + n_timed_out:
-                rc.write("dead_letter", dead_delta.coalesce(self._wparts(n_selected)))
             # per-task trace: one event per state change this round — fetch
             # attempts (status + attempt; death reason in detail), admissions,
-            # deadline timeouts, plus any buffered seed / re-drive submissions
+            # deadline timeouts, plus any buffered seed / re-drive submissions.
+            # The events with a detail are the round's deaths: the recycle bin
+            # (dead_letter()) is a view of them, not a table of its own
             trace = self._trace_events(
                 classified, rnd, F.col("status"), attempt="attempt",
                 detail="dead_reason",
@@ -905,6 +861,7 @@ class CrawlEngine:
             # else: _bloom already reads the last written parquet table
             self._bloom_maybe_rebuild(url_seen, rnd)
             summary["selected"] += n_selected
+            summary["admitted"] += n_admitted
             summary["rounds"] = rnd + 1 - start_round
             frontier_est += n_admitted + n_recrawl
             seen_est += n_admitted
@@ -914,13 +871,13 @@ class CrawlEngine:
         if last is not None:
             log = snap.read_deltas(spark, self.ckpt_dir, "fetch_log", last)
             summary["fetched"] = log.filter(F.col("status") == P.ST_FETCHED).count()
-            dead_all = snap.read_deltas(spark, self.ckpt_dir, "dead_letter", last)
-            summary["dead"] = dead_all.count() if dead_all is not None else 0
+            summary["dead"] = self.dead_letter().count()
             seen = snap.read_deltas(spark, self.ckpt_dir, "url_seen", last)
-            summary["url_seen"] = seen.count()
             # order-independent row digests: equivalence checks (straight
-            # vs resumed, across bucketings) compare actual rows, not counts
+            # vs resumed, across bucketings) compare actual rows, not counts;
+            # the digest's top bits are the row count
             summary["url_seen_digest"] = rows_digest(seen, ["url"])
+            summary["url_seen"] = summary["url_seen_digest"] >> 64
             summary["fetch_log_digest"] = rows_digest(
                 log, ["round", "url", "status", "attempt"]
             )
@@ -963,9 +920,16 @@ class CrawlEngine:
             max_urls_per_template=max_urls_per_template,
         )
 
-    def dead_letter(self) -> DataFrame:
-        last = snap.latest_round(self.ckpt_dir)
-        return snap.read_deltas(self.spark, self.ckpt_dir, "dead_letter", last)
+    def dead_letter(self) -> Optional[DataFrame]:
+        """The recycle bin: (url, reason, generation, round) of every dead
+        task — the trace events whose ``detail`` holds a death reason (a
+        fetch outcome's dead_reason, or a deadline ``timeout``)."""
+        trace = self.task_trace()
+        if trace is None:
+            return None
+        return trace.filter(F.col("detail").isNotNull()).select(
+            "url", F.col("detail").alias("reason"), "generation", "round"
+        )
 
     LINEAGE_SCHEMA = (
         "partition_id int, urls_in long, fetched long, failed long, dead long, "

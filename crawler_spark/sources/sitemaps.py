@@ -284,3 +284,21 @@ def fixture_seed_table(spark: SparkSession, fix_dir: str,
         .select("url")
     return seeds_from_sitemaps(
         expand_sitemap_tree(bodies, roots, max_depth=max_depth))
+
+
+def robots_seed_table(spark: SparkSession, fix_dir: str) -> DataFrame:
+    """Resolve a fixture through the full web-native discovery chain:
+    robots.txt bodies → RFC 9309 ``Sitemap:`` directives → sitemap tree →
+    seed rows (the order a real crawl runs in).  Needs a raw-body
+    ``robots.parquet`` (``robots_txt`` column); like
+    :func:`fixture_seed_table`, the result feeds ``CrawlEngine(seeds_df=)``.
+    """
+    import os
+
+    raw = spark.read.parquet(os.path.join(fix_dir, "robots.parquet"))
+    if "robots_txt" not in raw.columns:
+        raise ValueError(
+            "robots_seed_table needs a raw-body robots.parquet "
+            "(robots_txt column) carrying Sitemap: directives")
+    bodies = spark.read.parquet(os.path.join(fix_dir, "sitemaps.parquet"))
+    return seeds_from_sitemaps(expand_sitemap_tree(bodies, roots_from_robots(raw)))

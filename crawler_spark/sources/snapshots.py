@@ -9,10 +9,12 @@ metadata — directly over Parquet:
   + directory fsync (atomic on POSIX, and durable once the commit returns);
   a round directory without a manifest is an uncommitted torn write and is
   ignored + cleaned on resume
-* append-only tables (url_seen, dead_letter, fetch_log, story_results,
-  payload_log, task_trace) are stored as per-round DELTAS and unioned on
-  read — the Iceberg manifest-list pattern, so a round's commit cost is
-  O(round output), not O(total state)
+* append-only tables (url_seen, fetch_log, story_results, payload_log,
+  task_trace) are stored as per-round DELTAS and unioned on read — the
+  Iceberg manifest-list pattern, so a round's commit cost is O(round
+  output), not O(total state); a delta table named in a round's
+  ``compacted`` is a FULL snapshot, and ``read_deltas`` starts its union
+  there (the Iceberg rewrite-manifests pattern)
 * small per-round facts (tallies, Bloom geometry, per-partition lineage)
   ride the manifest's ``meta`` instead of a table, so they commit with the
   manifest itself
@@ -21,7 +23,7 @@ metadata — directly over Parquet:
   commit protocol here are deliberately swap-compatible)
 
 Swap path to real Iceberg: point ``spark.sql.catalog.crawl`` at an Iceberg
-catalog and replace ``commit_round``/``read_*`` with MERGE/snapshot reads;
+catalog and replace ``RoundCommit``/``read_*`` with MERGE/snapshot reads;
 the engine only touches this module for state IO.
 """
 
@@ -36,11 +38,6 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 
 MANIFEST = "MANIFEST.json"
-FULL_TABLES = ("frontier", "bloom")
-DELTA_TABLES = (
-    "url_seen", "dead_letter", "fetch_log", "story_results", "payload_log",
-    "task_trace",
-)
 
 
 def _round_dir(ckpt_dir: str, rnd: int) -> str:
@@ -121,30 +118,6 @@ class RoundCommit:
         return manifest
 
 
-def commit_round(
-    ckpt_dir: str,
-    rnd: int,
-    tables: dict[str, DataFrame],
-    meta: Optional[dict] = None,
-    compacted: tuple[str, ...] = (),
-) -> dict:
-    """Write a round's tables, then the manifest (the atomic commit point).
-
-    A table named in ``compacted`` is a FULL snapshot (all history folded
-    in): ``read_deltas`` starts its union there instead of round 0 — the
-    Iceberg rewrite-manifests pattern, keeping both the file-listing fan-in
-    and the union-plan width O(rounds-since-compaction) on long crawls.
-
-    Table writes run as CONCURRENT Spark jobs (RoundCommit thread pool);
-    callers that can hand tables over incrementally should use RoundCommit
-    directly so early tables overlap the rest of the round's driver work.
-    """
-    rc = RoundCommit(ckpt_dir, rnd, max_workers=len(tables))
-    for name, df in tables.items():
-        rc.write(name, df)
-    return rc.commit(meta=meta, compacted=compacted)
-
-
 def committed_rounds(ckpt_dir: str) -> list[int]:
     """Rounds with a valid manifest, ascending; torn dirs are skipped."""
     if not os.path.isdir(ckpt_dir):
@@ -191,7 +164,7 @@ def read_deltas(
     spark: SparkSession, ckpt_dir: str, name: str, upto_round: int
 ) -> Optional[DataFrame]:
     """Union of a delta table across committed rounds ≤ upto_round, starting
-    from the table's most recent COMPACTED snapshot (see commit_round)."""
+    from the table's most recent COMPACTED snapshot (see the module doc)."""
     rounds = [r for r in committed_rounds(ckpt_dir) if r <= upto_round]
     start = 0
     for i, r in enumerate(rounds):

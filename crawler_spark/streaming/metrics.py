@@ -4,7 +4,7 @@ The reference's runtime observability is poll-loop REST counters
 (reference PlannerCurrentController.java, SavePointPlanner.java:195-216
 plan-done reconciliation).  Spark-first, the same signals fall out of the
 checkpoint directory itself: every round commits append-only delta tables
-(fetch_log, dead_letter, payload_log), so a file-source ``readStream`` over
+(fetch_log, task_trace, payload_log), so a file-source ``readStream`` over
 them IS the live event stream of the crawl — no extra message bus.
 
 Provided streams:
@@ -13,7 +13,8 @@ Provided streams:
   with a watermark for late rounds (T2's await-timeout analog: a round that
   commits later than the watermark is consigned to the dead-letter path the
   batch engine already handles).
-* ``dead_letter_alert_stream`` — recycle-bin pressure (U1): rows per reason.
+* ``dead_letter_alert_stream`` — recycle-bin pressure (U1): the task
+  trace's death events (``detail`` not null) per reason.
 * ``run_stream_to_memory``  — test/driver helper: drains a stream with the
   availableNow trigger into an in-memory table and returns the rows.
 
@@ -39,7 +40,10 @@ _FETCH_LOG_SCHEMA = (
     "redirected boolean, repaired_url string, proxy_ip string, "
     "status_line string, event_epoch double"
 )
-_DEAD_SCHEMA = "url string, reason string, generation int, round int"
+_TRACE_SCHEMA = (
+    "round int, url string, task_url string, state string, attempt int, "
+    "generation int, detail string"
+)
 
 
 def _committed_frontier(ckpt_dir: str) -> int:
@@ -94,14 +98,17 @@ def fetch_metrics_stream(
 
 
 def dead_letter_alert_stream(spark: SparkSession, ckpt_dir: str) -> DataFrame:
-    """Streaming recycle-bin pressure: counts per dead reason (U1/P3)."""
+    """Streaming recycle-bin pressure: counts per dead reason (U1/P3) over
+    the task trace's death events, the rows ``CrawlEngine.dead_letter()``
+    reads."""
     dead = (
-        spark.readStream.schema(_DEAD_SCHEMA)
+        spark.readStream.schema(_TRACE_SCHEMA)
         .option("pathGlobFilter", "*.parquet")
-        .parquet(f"{ckpt_dir}/round=*/dead_letter")
+        .parquet(f"{ckpt_dir}/round=*/task_trace")
         .filter(F.col("round") <= F.lit(_committed_frontier(ckpt_dir)))
+        .filter(F.col("detail").isNotNull())
     )
-    return dead.groupBy("reason").agg(
+    return dead.groupBy(F.col("detail").alias("reason")).agg(
         F.count("*").alias("n"), F.max("round").alias("last_round")
     )
 

@@ -82,7 +82,9 @@ def test_per_host_fifo_order(engine_run, golden):
     assert per_host == golden.per_host_fetch_order()
 
 
-def test_lineage_written(engine_run):
+def test_lineage_written(engine_run, golden):
+    import os
+
     from crawler_spark.sources import snapshots as snap
 
     eng, summary = engine_run
@@ -90,12 +92,18 @@ def test_lineage_written(engine_run):
     assert len(lin) > 0
     total_in = sum(r.urls_in for r in lin)
     assert total_in == summary["selected"]
+    assert summary["admitted"] == sum(l["admitted"] for l in golden.lineage)
     # per-partition granularity with wall-clock metrics
     assert all(r.wall_ms >= 0 for r in lin)
     # each round's manifest carries its own rows, summing to its tally
     for rnd in snap.committed_rounds(eng.ckpt_dir):
         manifest = snap.read_manifest(eng.ckpt_dir, rnd)
         assert "lineage" not in manifest["tables"]
+        # the recycle bin is the trace's death events, not a table
+        assert "dead_letter" not in manifest["tables"]
+        assert not os.path.exists(
+            os.path.join(eng.ckpt_dir, f"round={rnd:05d}", "dead_letter")
+        )
         rows = manifest["meta"]["lineage"]
         assert sum(r["urls_in"] for r in rows) == manifest["meta"]["selected"]
         assert {r["round"] for r in rows} == {rnd}
@@ -537,7 +545,7 @@ def test_emulator_feed_flow_golden(engine_run, golden):
 # warm-up crawl (the session's first crawl issues a few more), under the
 # session in conftest.py (local[4], 8 shuffle partitions).  A change that
 # adds a job to the crawl fails here; one that removes jobs lowers the pin.
-JOBS_PER_CRAWL = 150
+JOBS_PER_CRAWL = 145
 
 
 def test_jobs_per_crawl_pinned(spark, tmp_path):

@@ -168,12 +168,15 @@ def test_bloom_sized_from_observed_counts_fpp_bounded(spark):
 
 
 def test_commit_round_blobs_and_concurrent_writes(spark, tmpdir_path):
-    """commit_round writes every table concurrently under one manifest."""
+    """RoundCommit writes every table concurrently under one manifest."""
     from crawler_spark.sources import snapshots as snap
 
     df_a = spark.range(100).withColumnRenamed("id", "a")
     df_b = spark.range(50).withColumnRenamed("id", "b")
-    manifest = snap.commit_round(tmpdir_path, 0, {"ta": df_a, "tb": df_b}, meta={"x": 1})
+    rc = snap.RoundCommit(tmpdir_path, 0)
+    rc.write("ta", df_a)
+    rc.write("tb", df_b)
+    manifest = rc.commit(meta={"x": 1})
     assert set(manifest["tables"]) == {"ta", "tb"}
     assert snap.read_full(spark, tmpdir_path, "ta", 0).count() == 100
     assert snap.read_full(spark, tmpdir_path, "tb", 0).count() == 50
@@ -439,9 +442,10 @@ def test_delta_compaction_reads_from_snapshot(spark, tmpdir_path):
     d0 = spark.range(0, 10).withColumnRenamed("id", "k")
     full1 = spark.range(0, 20).withColumnRenamed("id", "k")  # 0..9 folded in
     d2 = spark.range(20, 25).withColumnRenamed("id", "k")
-    snap.commit_round(tmpdir_path, 0, {"t": d0})
-    snap.commit_round(tmpdir_path, 1, {"t": full1}, compacted=("t",))
-    snap.commit_round(tmpdir_path, 2, {"t": d2})
+    for rnd, df, compacted in ((0, d0, ()), (1, full1, ("t",)), (2, d2, ())):
+        rc = snap.RoundCommit(tmpdir_path, rnd)
+        rc.write("t", df)
+        rc.commit(compacted=compacted)
     out = snap.read_deltas(spark, tmpdir_path, "t", 2)
     assert out.count() == 25  # 35 would mean round 0 was (wrongly) included
     assert {r.k for r in out.collect()} == set(range(25))

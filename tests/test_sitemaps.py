@@ -13,7 +13,9 @@ from crawler_spark.functions.robots import robots_sitemaps
 from crawler_spark.sources.sitemaps import (
     MAX_ENTRIES,
     expand_sitemap_tree,
+    fixture_seed_table,
     parse_sitemap,
+    robots_seed_table,
     seeds_from_sitemaps,
     sitemap_entries,
 )
@@ -144,7 +146,6 @@ def test_fixture_sitemaps_reproduce_seed_table(spark, tmp_path_factory):
     import os
 
     from crawler_spark.fixtures import generate
-    from crawler_spark.sources.sitemaps import fixture_seed_table
 
     fix = str(tmp_path_factory.mktemp("sm_fix"))
     generate(fix, n_pages=96, n_hosts=5, seed=13)
@@ -166,10 +167,10 @@ def test_engine_sitemap_bootstrap_matches_file_seeds(spark, tmp_path_factory):
     fix = str(tmp_path_factory.mktemp("sm_eng_fix"))
     generate(fix, n_pages=72, n_hosts=4, seed=17)
     runs = {}
-    for src in ("files", "sitemaps"):
+    for src, seeds in (("files", None), ("sitemaps", fixture_seed_table(spark, fix))):
         eng = CrawlEngine(spark, fix,
                           str(tmp_path_factory.mktemp(f"sm_ckpt_{src}")),
-                          CrawlConfig(max_rounds=6), seed_source=src)
+                          CrawlConfig(max_rounds=6), seeds_df=seeds)
         eng.run()
         runs[src] = (
             sorted((r.round, r.host, r.rank, r.url, r.status)
@@ -180,7 +181,7 @@ def test_engine_sitemap_bootstrap_matches_file_seeds(spark, tmp_path_factory):
 
 
 def test_engine_robots_discovery_chain(spark, tmp_path_factory):
-    """seed_source='robots': robots.txt Sitemap: directives → sitemap tree →
+    """robots_seed_table: robots.txt Sitemap: directives → sitemap tree →
     seeds, reproducing the file-seeded crawl exactly — the full web-native
     discovery chain in one run."""
     import os
@@ -211,10 +212,13 @@ def test_engine_robots_discovery_chain(spark, tmp_path_factory):
     spark.createDataFrame(raw_rows, "host string, robots_txt string").coalesce(
         1).write.mode("overwrite").parquet(os.path.join(raw_fix, "robots.parquet"))
 
+    with pytest.raises(ValueError, match="raw-body robots.parquet"):
+        robots_seed_table(spark, fix)
     runs = {}
-    for src, d in (("files", fix), ("robots", raw_fix)):
+    for src, d, seeds in (("files", fix, None),
+                          ("robots", raw_fix, robots_seed_table(spark, raw_fix))):
         eng = CrawlEngine(spark, d, str(tmp_path_factory.mktemp(f"rb_ck_{src}")),
-                          CrawlConfig(max_rounds=6), seed_source=src)
+                          CrawlConfig(max_rounds=6), seeds_df=seeds)
         eng.run()
         runs[src] = sorted((r.round, r.host, r.rank, r.url, r.status)
                            for r in eng.fetch_log().collect())
