@@ -22,7 +22,10 @@ pandas round-trip per bucket — 256 per pass for a few hundred hashes).  At
 cluster scale P >= n_buckets, so a shard is one bucket.
 
 * build  — numpy bitset per bucket, double hashing; capacity = headroom ×
-  observed items (min floor), fpp-targeted sizing.
+  observed items with a floor of 64, fpp-targeted sizing.  The floor is
+  small so that bits per URL stay flat with load (19.2 at 1% fpp once a
+  bucket holds more than 32 URLs); a bucket that outgrows its capacity is
+  rebuilt by the engine's saturation sweep.
 * update — cogroup of (bloom rows, delta hashes) per shard: OR each
   bucket's delta into its bits at its existing geometry; new buckets size
   themselves from the delta.  O(Δ) work per round.
@@ -76,7 +79,7 @@ __all__ = [
 BLOOM_FORMAT = 2
 BLOOM_SCHEMA = "bucket int, bits binary, n_bits long, k int, n_items long, capacity long"
 DEFAULT_FPP = 0.01
-MIN_CAPACITY = 1024
+MIN_CAPACITY = 64
 HEADROOM = 2.0
 
 

@@ -3550,8 +3550,8 @@ GROUP BY doc_id, g
 # single-operator demos into composite queries — every merged query calls
 # the SAME underlying functions (which stay in AUX_REGISTRY and keep their
 # own oracle twins under pytest, unless a tagged union such as
-# q19_ann_methods gates their every row against the same SQL twin), so no
-# operator loses either its code path
+# q19_ann_methods or q24_embed_near_dup_methods gates their every row
+# against the same SQL twin), so no operator loses either its code path
 # or its driver-witnessed row.  Merges are tagged unions (same-shape
 # results) or inner joins on the natural key (per-doc / per-source / per-
 # lang profiles); all join keys are non-null on both sides by construction,
@@ -5352,8 +5352,6 @@ AUX_REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | No
     "q17_minhash_lsh": (q17_minhash_lsh, SQL_Q17),
     "q21_simhash": (q21_simhash, SQL_Q21),
     "q23_binary_meta": (q23_binary_meta, SQL_Q23),
-    "q24_embed_near_dup": (q24_embed_near_dup, SQL_Q24),
-    "q25_embed_near_dup_lsh": (q25_embed_near_dup_lsh, SQL_Q25),
     "q30_token_stats": (q30_token_stats, SQL_Q30),
     "q35_repetition": (q35_repetition, SQL_Q35),
     "q39_unigram_quality": (q39_unigram_quality, SQL_Q39),

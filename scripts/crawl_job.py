@@ -60,6 +60,10 @@ def build_spark(cpus: int | None, shuffle_partitions: int | None):
         # batches ~25 MB and the scan CPU-bound
         .config("spark.sql.parquet.columnarReaderBatchSize", "256")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
+        # a crawl compiles a few hundred distinct generated classes; the
+        # default 100-entry codegen cache evicts them round after round, so
+        # a resumed or repeated crawl compiles them all over again
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
     )
     if cpus is not None:  # plain-python launch; spark-submit passes --master itself
         b = b.master(f"local[{cpus}]")

@@ -148,11 +148,13 @@ def test_shard_kernels_match_per_bucket_reference(spark, n_buckets, fpp, n_cands
         df.unpersist()
 
 
-def test_bloom_sized_from_observed_counts_fpp_bounded(spark):
-    """Scale path: 10⁷ seen hashes, bits sized per-bucket from observed
-    counts — false-positive rate on fresh keys stays ≤ 2× nominal, and the
-    filter never transits the driver (the only collect here is the test's)."""
-    n, fpp = 10_000_000, 0.01
+@pytest.mark.parametrize("n", [8_192, 10_000_000])
+def test_bloom_sized_from_observed_counts_fpp_bounded(spark, n):
+    """Bench scale (32 hashes per bucket) and scale path (10⁷ seen hashes):
+    bits sized per-bucket from observed counts, not a capacity floor —
+    false-positive rate on fresh keys stays ≤ 2× nominal, and the filter
+    never transits the driver (the only collect here is the test's)."""
+    fpp = 0.01
     seen = spark.range(n).select(F.xxhash64("id").alias("url_hash"))
     bloom = dd.bloom_build(seen, n_buckets=256, fpp=fpp).persist()
     rows = bloom.select("bucket", "n_bits", "n_items", "capacity").collect()
@@ -212,7 +214,8 @@ def test_round_commit_streaming_and_torn_write(spark, tmpdir_path):
 
 class _Table:
     """The slice of DataFrame RoundCommit.write uses (``df.write.mode(m)
-    .parquet(path)``), logging when each write starts and ends."""
+    .parquet(path, compression=c)``), logging when each write starts and
+    ends."""
 
     def __init__(self, log, seconds=0.0, error=None):
         self.log, self.seconds, self.error = log, seconds, error
@@ -224,7 +227,7 @@ class _Table:
     def mode(self, _):
         return self
 
-    def parquet(self, path):
+    def parquet(self, path, compression=None):
         import time
 
         name = os.path.basename(path)
@@ -496,6 +499,17 @@ def test_engine_soak_many_rounds_resume_clean(spark, tmpdir_path):
     s = eng.run()
     assert s["rounds"] == 8
     assert len(glob.glob(os.path.join(ckpt, "round=*", "MANIFEST.json"))) == 8
+    # every committed table is zstd parquet, column chunk by column chunk
+    import pyarrow.parquet as pq
+
+    files = glob.glob(os.path.join(ckpt, "round=*", "*", "*.parquet"))
+    codecs = {
+        md.row_group(g).column(c).compression
+        for md in (pq.ParquetFile(f).metadata for f in files)
+        for g in range(md.num_row_groups)
+        for c in range(md.num_columns)
+    }
+    assert files and codecs == {"ZSTD"}
 
     eng2 = CrawlEngine(spark, fix, ckpt, cfg, compact_every=3)
     s2 = eng2.run(resume=True)
