@@ -25,7 +25,7 @@ cluster scale P >= n_buckets, so a shard is one bucket.
   observed items with a floor of 64, fpp-targeted sizing.  The floor is
   small so that bits per URL stay flat with load (19.2 at 1% fpp once a
   bucket holds more than 32 URLs); a bucket that outgrows its capacity is
-  rebuilt by the engine's saturation sweep.
+  rebuilt before the next round probes it (resize below).
 * update — cogroup of (bloom rows, delta hashes) per shard: OR each
   bucket's delta into its bits at its existing geometry; new buckets size
   themselves from the delta.  O(Δ) work per round.
@@ -40,8 +40,12 @@ cluster scale P >= n_buckets, so a shard is one bucket.
   correcting, from the same job that counts the admitted rows.  The pass
   is persisted until the commit writes the next rows from it.
 * resize — a bucket whose ``n_items`` exceeds ``capacity`` degrades fpp but
-  NEVER correctness (the filter only prunes anti-join probes); the engine
-  rebuilds saturated buckets from url_seen with grown capacity.
+  NEVER correctness (the filter only prunes anti-join probes).  The fused
+  pass's count job lists the buckets it leaves past capacity, and the engine
+  rebuilds them from url_seen at ``HEADROOM`` × their load before the next
+  round's probe (a resumed crawl's first round probes the table as it was
+  committed), and capacity grows geometrically: one url_seen scan each
+  time a bucket's load doubles.
 
 Every pass returns the rows of the per-bucket definition exactly (tested
 in tests/test_dedup.py), so persisted tables keep ``BLOOM_FORMAT`` 2.
@@ -254,9 +258,8 @@ def bloom_update(
     Cogroup (bloom rows, delta hashes) per shard: existing buckets keep
     their geometry (bits OR delta), fresh buckets size from the delta.
     A bucket past capacity keeps absorbing (fpp degrades, correctness does
-    not); the engine rebuilds it from url_seen when it notices
-    ``n_items > capacity`` (the bloom table is n_buckets rows — checking is
-    a trivial job)."""
+    not); the engine's round runs ``bloom_admit``, which reports such
+    buckets so that they are rebuilt from url_seen."""
     delta = with_bucket(admitted.select("url_hash"), n_buckets).select("bucket", "url_hash")
     n_shards = _n_shards(delta, n_buckets)
 
@@ -359,12 +362,14 @@ def admit_new_bloom(
 class Admission(NamedTuple):
     """One round's URL-seen admission, materialized: ``admitted`` is
     persisted and counted; ``state_next`` is the next filter state (lazy,
-    reading only persisted rows); ``cached`` lists the frames to unpersist
-    once ``state_next`` is written."""
+    reading only persisted rows); ``saturated`` lists the buckets whose
+    ``state_next`` row holds more items than its capacity; ``cached`` lists
+    the frames to unpersist once ``state_next`` is written."""
 
     admitted: DataFrame
     state_next: DataFrame
     n_admitted: int
+    saturated: tuple
     cached: tuple
 
 
@@ -379,7 +384,8 @@ def bloom_admit(
     confirmed as new).  ``state_next`` holds bloom_update(bloom, admitted)'s
     rows: the bits are exact because a probable hit has all k bits set
     already, and ``n_items`` adds each bucket's confirmed false positives,
-    counted by the same job that counts the admitted rows.  The fused pass
+    counted by the same job that counts the admitted rows and lists the
+    buckets ``state_next`` leaves past capacity.  The fused pass
     stays persisted until ``state_next`` is written, so that write reads
     persisted rows only."""
     fused = bloom_probe_update(candidates, bloom, n_buckets, fpp).persist()
@@ -388,18 +394,32 @@ def bloom_admit(
     confirmed_new = probed.filter(F.col("probably_seen")).join(
         url_seen.select("url"), "url", "left_anti")
     admitted = probed.filter(~F.col("probably_seen")).unionByName(confirmed_new).persist()
+    # one job counts the admitted rows and finds the buckets whose next row
+    # is past capacity: a bucket's state row enters as n_items - capacity and
+    # each confirmed false positive adds 1 to its bucket (the rows of
+    # definite-new admissions group under a null bucket)
+    nxt = fused.filter(F.col("bits").isNotNull())
     tally = (
-        admitted.groupBy(F.when(F.col("probably_seen"), F.col("bucket")).alias("fp_bucket"))
-        .count()
+        admitted.select(
+            F.when(F.col("probably_seen"), F.col("bucket")).alias("bucket"),
+            F.lit(1).alias("n"),
+            F.lit(1).cast("long").alias("over"),
+        )
+        .unionByName(nxt.select(
+            "bucket", F.lit(0).alias("n"), (F.col("n_items") - F.col("capacity")).alias("over")))
+        .groupBy("bucket")
+        .agg(F.sum("n").alias("n"), F.sum("over").alias("over"))
+        .filter((F.col("n") > 0) | (F.col("over") > 0))
         .collect()
     )
-    false_pos = {r["fp_bucket"]: r["count"] for r in tally if r["fp_bucket"] is not None}
+    fp_rows = [r for r in tally if r["bucket"] is not None]
+    false_pos = {r["bucket"]: r["n"] for r in fp_rows if r["n"]}
     n_items = F.col("n_items")
     if false_pos:
         per_bucket = F.create_map(*[F.lit(v) for kv in false_pos.items() for v in kv])
         n_items = n_items + F.coalesce(F.try_element_at(per_bucket, F.col("bucket")), F.lit(0))
-    state_next = fused.filter(F.col("bits").isNotNull()).select(
-        *[n_items.alias(c) if c == "n_items" else c for c in BLOOM_COLS]
-    )
-    return Admission(admitted, state_next, sum(r["count"] for r in tally), (admitted, fused))
+    state_next = nxt.select(*[n_items.alias(c) if c == "n_items" else c for c in BLOOM_COLS])
+    saturated = tuple(sorted(r["bucket"] for r in fp_rows if r["over"] > 0))
+    return Admission(
+        admitted, state_next, sum(r["n"] for r in tally), saturated, (admitted, fused))
 

@@ -67,7 +67,6 @@ FRONTIER_COLS = [
     "url", "host", "wave", "priority", "page_idx", "attempt", "generation",
     "task_url", "cookies",
 ]
-SAT_CHECK_EVERY = 8  # rounds between bloom saturation sweeps (cheap, periodic)
 # recycle-bin re-drive picks these up (TIMEOUTED tasks go to the bin too,
 # StoryWorker.java:193-196)
 _RETRIABLE = ("fetch_retries_exhausted", "anti_retries_exhausted", "timeout")
@@ -415,32 +414,22 @@ class CrawlEngine:
                     pass  # missing/torn table → rebuild below
         self._bloom = dd.bloom_build(url_seen, self.bloom_buckets, self.bloom_fpp)
 
-    def _bloom_maybe_rebuild(self, url_seen: DataFrame, rnd: int) -> None:
-        """Periodic saturation sweep over the COMMITTED bloom table (tiny —
-        ≤ n_buckets rows read back from parquet, so the check costs one
-        trivial job every SAT_CHECK_EVERY rounds, not a full-DAG job every
-        round).  A saturated bucket (n_items > capacity ⇒ degraded fpp,
-        never wrong answers) is rebuilt from url_seen with count-derived
-        capacity; the rebuild lineage materializes inside the NEXT round's
-        commit."""
-        if rnd % SAT_CHECK_EVERY != SAT_CHECK_EVERY - 1:
-            return
-        sat = [
-            r["bucket"]
-            for r in self._bloom.filter(F.col("n_items") > F.col("capacity"))
-            .select("bucket")
-            .collect()
-        ]
+    def _bloom_rebuild(self, url_seen: DataFrame, sat: tuple) -> None:
+        """Rebuild the buckets the round's admission left past capacity
+        (n_items > capacity ⇒ degraded fpp, never wrong answers) from the
+        committed url_seen, sized from their counts.  The admission's count
+        job already listed them, so this costs no job of its own; the rebuild
+        materializes inside the NEXT round's fused pass, before it probes."""
         if not sat:
             return
         rebuilt = dd.bloom_build(
             dd.with_bucket(url_seen.select("url_hash"), self.bloom_buckets)
-            .filter(F.col("bucket").isin(sat))
+            .filter(F.col("bucket").isin(*sat))
             .drop("bucket"),
             self.bloom_buckets,
             self.bloom_fpp,
         )
-        self._bloom = self._bloom.filter(~F.col("bucket").isin(sat)).unionByName(rebuilt)
+        self._bloom = self._bloom.filter(~F.col("bucket").isin(*sat)).unionByName(rebuilt)
         self._bloom_dirty = True  # force the next commit to materialize the rebuild
 
     PAYLOAD_SCHEMA = (
@@ -835,7 +824,7 @@ class CrawlEngine:
                 "bloom_buckets": self.bloom_buckets,
             }
             # the bloom table is rewritten only when its content changed (new
-            # hashes OR'd in / saturation rebuild); otherwise the manifest
+            # hashes OR'd in / rebuilt buckets); otherwise the manifest
             # points at the last written table and skips the n_buckets-row write
             bloom_written = bool(n_admitted or self._bloom_dirty or self._bloom_round is None)
             if bloom_written:
@@ -859,7 +848,7 @@ class CrawlEngine:
                 self._bloom_round = rnd
                 self._bloom_dirty = False
             # else: _bloom already reads the last written parquet table
-            self._bloom_maybe_rebuild(url_seen, rnd)
+            self._bloom_rebuild(url_seen, admission.saturated)
             summary["selected"] += n_selected
             summary["admitted"] += n_admitted
             summary["rounds"] = rnd + 1 - start_round

@@ -410,32 +410,6 @@ def test_resume_equals_straight_run(spark, fix_dir, tmp_path_factory, golden):
     assert sum(r.urls_in for r in lin) == len(golden.fetch_log)
 
 
-def test_bloom_saturation_rebuild(spark, fix_dir, tmp_path):
-    """With two Bloom buckets, a bucket is past its capacity at the
-    saturation sweep after round SAT_CHECK_EVERY - 1; the next round commits
-    it rebuilt from url_seen and sized to its load, and admission stays
-    exact."""
-    from crawler_spark.plans.engine import SAT_CHECK_EVERY, CrawlEngine
-    from crawler_spark.sources import snapshots as snap
-
-    cfg = replace(CFG, max_rounds=SAT_CHECK_EVERY + 1)
-    ckpt = str(tmp_path / "ck")
-    eng = CrawlEngine(spark, fix_dir, ckpt, cfg, bloom_buckets=2)
-    assert eng.run()["rounds"] == cfg.max_rounds
-
-    def bloom(rnd):
-        bloom_round = snap.read_manifest(ckpt, rnd)["meta"]["bloom_round"]
-        return bloom_round, snap.read_full(spark, ckpt, "bloom", bloom_round).collect()
-
-    swept = SAT_CHECK_EVERY - 1
-    _, before = bloom(swept)
-    assert any(r.n_items > r.capacity for r in before)
-    written, after = bloom(swept + 1)
-    assert written == swept + 1 and len(after) == 2
-    assert all(r.capacity >= r.n_items for r in after)
-    assert {r.url for r in eng.url_seen().collect()} == simulate(fix_dir, cfg).url_seen
-
-
 def test_execution_paths_order_recrawl_before_its_fetch(spark, fix_dir, tmp_path):
     """A resumed crawl's seeds_df refetch is traced as ``recrawl`` in the
     round that fetches it again; both path readbacks list that submission

@@ -479,15 +479,20 @@ def test_engine_compaction_preserves_membership(spark, tmpdir_path):
 
 def test_engine_soak_many_rounds_resume_clean(spark, tmpdir_path):
     """Soak: tight budgets force many rounds across several compaction
-    cycles and the T2 round-deadline; afterwards (a) every round has a
-    committed manifest, (b) resume re-admits NOTHING (url_seen exactness
-    survives long histories + folding), (c) membership covers the log."""
+    cycles and the T2 round-deadline, and two Bloom buckets outgrow their
+    64-item floor; afterwards (a) every round has a committed manifest, (b)
+    a bucket a round commits past capacity is rebuilt from url_seen at
+    HEADROOM × its load before the next round, (c) url_seen equals the
+    simulator's and resume re-admits NOTHING (url_seen exactness survives
+    long histories, folding and rebuilds), (d) membership covers the log."""
     import glob
     import os
 
     from crawler_spark.fixtures import generate
     from crawler_spark.plans.engine import CrawlEngine
     from crawler_spark.plans.policy import CrawlConfig
+    from crawler_spark.simulator import simulate
+    from crawler_spark.sources import snapshots as snap
 
     fix = os.path.join(tmpdir_path, "soakfix")
     generate(fix, n_pages=768, n_hosts=8, seed=13)
@@ -495,10 +500,26 @@ def test_engine_soak_many_rounds_resume_clean(spark, tmpdir_path):
     cfg = CrawlConfig(
         round_seconds=2.0, max_burst_per_host=8, max_rounds=8, max_wait_rounds=4
     )
-    eng = CrawlEngine(spark, fix, ckpt, cfg, compact_every=3)
+    eng = CrawlEngine(spark, fix, ckpt, cfg, compact_every=3, bloom_buckets=2)
     s = eng.run()
     assert s["rounds"] == 8
     assert len(glob.glob(os.path.join(ckpt, "round=*", "MANIFEST.json"))) == 8
+    blooms = [
+        {
+            r.bucket: r
+            for r in snap.read_full(
+                spark, ckpt, "bloom", snap.read_manifest(ckpt, rnd)["meta"]["bloom_round"]
+            ).collect()
+        }
+        for rnd in range(8)
+    ]
+    saturated = [
+        (rnd, b) for rnd in range(7) for b, r in blooms[rnd].items() if r.n_items > r.capacity
+    ]
+    assert saturated
+    for rnd, b in saturated:
+        assert blooms[rnd + 1][b].capacity == dd.HEADROOM * blooms[rnd][b].n_items
+    assert {r.url for r in eng.url_seen().collect()} == simulate(fix, cfg).url_seen
     # every committed table is zstd parquet, column chunk by column chunk
     import pyarrow.parquet as pq
 
@@ -511,7 +532,7 @@ def test_engine_soak_many_rounds_resume_clean(spark, tmpdir_path):
     }
     assert files and codecs == {"ZSTD"}
 
-    eng2 = CrawlEngine(spark, fix, ckpt, cfg, compact_every=3)
+    eng2 = CrawlEngine(spark, fix, ckpt, cfg, compact_every=3, bloom_buckets=2)
     s2 = eng2.run(resume=True)
     assert s2["selected"] == 0  # nothing re-admitted after resume
 
